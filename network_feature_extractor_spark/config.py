@@ -11,7 +11,7 @@ contains their expressions (cheaper than runtime gating).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -21,7 +21,6 @@ class EngineConfig:
     burst_gap_s: float = 0.1  # timing_metrics.py:105
     activity_timeout_s: float = 1.0  # timing_metrics.py:101
     rolling_k: int = 5
-    ratio_min_turns: int = 10  # basic_metrics.py:431 gate
     fft_enabled: bool = False  # timing_metrics.py:102 default off
     hist_range: tuple[float, float] = (0.0, 4000.0)
     asof_hot_threshold: int = 100_000
@@ -42,12 +41,6 @@ class EngineConfig:
     )
     enabled_roles: tuple[str, ...] = ("user", "assistant", "system", "tool")
     checkpoint_buckets: int = 64
-    # per-turn materialization bucket count (0 = defaultParallelism):
-    # the materialized frame is written bucketBy(conv_id)+sortBy so every
-    # downstream session-keyed aggregate/window/join reads co-located,
-    # pre-sorted buckets with NO exchange (pay the shuffle once at write)
-    materialize_buckets: int = 0
-    extra: dict = field(default_factory=dict, compare=False)
 
     def is_enabled(self, feature: str) -> bool:
         return feature in self.enabled_features

@@ -8,6 +8,10 @@ are the same declarative pattern: a lag-gap flag summed over an ordered
 per-key window, which Catalyst executes as one WindowExec over sorted,
 hash-partitioned data — one shuffle, reused by every consumer of the
 same (partition, order) spec.
+
+``with_session_lags`` is the per-session form the snapshot modules share:
+one window adds the gap, a first-row flag and the lagged roles, and each
+module derives its islands from those columns instead of re-windowing.
 """
 
 from __future__ import annotations
@@ -46,3 +50,27 @@ def with_island_id(
     if gap_col is not None:
         df = df.withColumn(gap_col, F.coalesce(gap, F.lit(0.0)))
     return df
+
+
+def with_session_lags(
+    df: DataFrame, key_cols: list[str], role_col: str = "role"
+) -> DataFrame:
+    """Add, in ONE select over the ``key_cols`` window ordered by
+    (ts, turn_idx):
+
+    - ``_gap``: seconds since the previous row of the key, 0.0 on the first;
+    - ``_first``: true on the key's first row;
+    - ``_prev_role`` / ``_prev2_role``: the roles one and two rows back.
+
+    Every same-spec expression lands in one WindowExec; Catalyst prunes
+    the ones a consumer does not read.
+    """
+    w = Window.partitionBy(*key_cols).orderBy("ts", "turn_idx")
+    tsd = epoch_seconds("ts")
+    return df.select(
+        "*",
+        F.coalesce(tsd - F.lag(tsd).over(w), F.lit(0.0)).alias("_gap"),
+        (F.row_number().over(w) == 1).alias("_first"),
+        F.lag(role_col).over(w).alias("_prev_role"),
+        F.lag(role_col, 2).over(w).alias("_prev2_role"),
+    )

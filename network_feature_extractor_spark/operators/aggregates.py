@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.islands import with_session_lags
 from ..functions.stats import clamped_rate, epoch_seconds, safe_div, stddev_pop_moments, text_len_col
 
 FWD_ROLE = "user"
@@ -59,20 +60,17 @@ def session_features(
     session. Input must already carry ``session_id`` (operators/sessionize).
     """
     keys = key_cols or ["conv_id", "session_id"]
-    w = Window.partitionBy(*keys).orderBy("ts", "turn_idx")
-
     tsd = epoch_seconds("ts")
-    d = turns_with_session.withColumn(
-        "_iat", F.coalesce(tsd - F.lag(tsd).over(w), F.lit(0.0))
-    ).withColumn("_len", text_len_col(turns_with_session))
+    d = with_session_lags(turns_with_session, keys).withColumn(
+        "_len", text_len_col(turns_with_session)
+    )
 
     ln = F.col("_len")
-    iat = F.col("_iat")
+    iat = F.col("_gap")
     is_fwd = F.col("role") == FWD_ROLE
     is_bwd = F.col("role") == BWD_ROLE
-    # first-row IAT is 0 by construction; exclude it from IAT stats via rn>1
-    d = d.withColumn("_rn", F.row_number().over(w))
-    iat_valid = F.col("_rn") > 1
+    # first-row IAT is 0 by construction; exclude it from IAT stats
+    iat_valid = ~F.col("_first")
 
     aggs = [
         # W2: temporal extent

@@ -12,16 +12,17 @@ Reference semantics:
   between them are active periods.
 
 All three are the gaps-and-islands primitive (functions/islands.py) at
-three thresholds.
+three thresholds. The snapshot's timing module (``timing_stats``) gets
+bursts and active/idle from one shared window over the session.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.islands import with_island_id
-from ..functions.stats import epoch_seconds, stddev_pop_moments
+from ..functions.islands import with_island_id, with_session_lags
+from ..functions.stats import epoch_seconds, stddev_pop_moments, text_len_col
 
 SESSION_GAP_S = 300.0  # TCP-timeout analog, config/config.yaml:36
 BURST_GAP_S = 0.1  # timing_metrics.py:105
@@ -83,83 +84,71 @@ def burst_stats(
     )
 
 
-def active_idle_stats(
+def timing_stats(
     df: DataFrame,
     key_cols: list[str],
-    ts_col: str = "ts",
+    burst_gap: float = BURST_GAP_S,
     activity_timeout: float = ACTIVITY_TIMEOUT_S,
-    order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Per key: active_periods, total_active_time, idle_periods,
-    total_idle_time — FlowStats fields ``src/core/flow_tracker.py:236-240``.
+    """Per key, from one (ts, turn_idx)-ordered window plus one burst-id cumsum:
 
-    idle time = sum of gaps > timeout; active time = sum of island spans;
-    idle_periods = islands - 1.
+    - W3 bursts: burst_count and mean/std/max/min burst duration, as in
+      ``burst_stats`` at ``burst_gap``;
+    - W4 active/idle, the FlowStats fields
+      ``src/core/flow_tracker.py:236-240``: a gap above
+      ``activity_timeout`` is an idle period, so idle_periods = number of
+      such gaps, total_idle_time = their sum, active_periods =
+      idle_periods + 1 and total_active_time = duration - total_idle_time
+      (the activity islands' spans partition the session's duration);
+    - subflows: a subflow IS an activity island (CICFlowMeter convention;
+      the reference *names* ``subflow_analysis`` in config,
+      ``config/config.yaml:25-26``, but never ships the module), so
+      subflow_count = active_periods and the per-subflow turn and
+      character means are the key's totals over active_periods.
+
+    Active/idle is algebra over the gaps, so it needs no island pass of
+    its own: two windows (lags, burst cumsum), two aggregations, no join.
     """
-    d = with_island_id(
-        df,
-        key_cols,
-        ts_col,
-        activity_timeout,
-        "_act_id",
-        order_cols=order_cols,
-        gap_col="_gap",
+    w = Window.partitionBy(*key_cols).orderBy("ts", "turn_idx")
+    d = with_session_lags(df, key_cols)
+    d = d.select(
+        "*",
+        F.sum((F.col("_gap") > burst_gap).cast("int"))
+        .over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .alias("_burst"),
     )
-    per_island = d.groupBy(*key_cols, "_act_id").agg(
-        (F.max(epoch_seconds(ts_col)) - F.min(epoch_seconds(ts_col))).alias("_span"),
-        F.sum(F.when(F.col("_gap") > activity_timeout, F.col("_gap")).otherwise(0.0)).alias(
-            "_idle_in"
-        ),
+    tsd = epoch_seconds("ts")
+    idle = F.col("_gap") > activity_timeout
+    per_burst = d.groupBy(*key_cols, "_burst").agg(
+        F.min(tsd).alias("_t0"),
+        F.max(tsd).alias("_t1"),
+        F.count("*").alias("_n"),
+        F.sum(text_len_col(df)).alias("_chars"),
+        F.sum(idle.cast("long")).alias("_idles"),
+        F.sum(F.when(idle, F.col("_gap")).otherwise(0.0)).alias("_idle_s"),
     )
-    return per_island.groupBy(*key_cols).agg(
-        F.count("*").alias("active_periods"),
-        F.sum("_span").alias("total_active_time"),
-        (F.count("*") - F.lit(1)).cast("long").alias("idle_periods"),
-        F.sum("_idle_in").alias("total_idle_time"),
+    dur = F.col("_t1") - F.col("_t0")
+    g = per_burst.groupBy(*key_cols).agg(
+        F.count("*").alias("burst_count"),
+        F.avg(dur).alias("burst_dur_mean"),
+        stddev_pop_moments(dur).alias("burst_dur_std"),
+        F.max(dur).alias("burst_dur_max"),
+        F.min(dur).alias("burst_dur_min"),
+        (F.max("_t1") - F.min("_t0")).alias("_duration"),
+        F.sum("_idles").alias("idle_periods"),
+        F.sum("_idle_s").alias("total_idle_time"),
+        F.sum("_n").alias("_n"),
+        F.sum("_chars").alias("_chars"),
     )
-
-
-def active_idle_subflow_stats(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    activity_timeout: float = ACTIVITY_TIMEOUT_S,
-    order_cols: list[str] | None = None,
-    text_col: str = "text",
-) -> DataFrame:
-    """Fused W4 active/idle + subflow metrics: a subflow IS an activity
-    island (same keys, same timeout — CICFlowMeter convention), so one
-    island pass and one two-level aggregation yields both feature sets.
-    Column-identical to joining ``active_idle_stats`` with the separate
-    subflow aggregation (equivalence-tested in tests/test_sessionize.py);
-    the registry uses this so the timing module costs two island passes
-    (bursts at 0.1 s + this) instead of three."""
-    d = with_island_id(
-        df,
-        key_cols,
-        ts_col,
-        activity_timeout,
-        "_act_id",
-        order_cols=order_cols,
-        gap_col="_gap",
-    )
-    per_island = d.groupBy(*key_cols, "_act_id").agg(
-        (F.max(epoch_seconds(ts_col)) - F.min(epoch_seconds(ts_col))).alias("_span"),
-        F.sum(F.when(F.col("_gap") > activity_timeout, F.col("_gap")).otherwise(0.0)).alias(
-            "_idle_in"
-        ),
-        F.count("*").alias("_t"),
-        F.sum(
-            F.col("text_len") if text_col == "text" and "text_len" in df.columns
-            else F.length(text_col).cast("double")
-        ).alias("_c"),
-    )
-    return per_island.groupBy(*key_cols).agg(
-        F.count("*").alias("active_periods"),
-        F.sum("_span").alias("total_active_time"),
-        (F.count("*") - F.lit(1)).cast("long").alias("idle_periods"),
-        F.sum("_idle_in").alias("total_idle_time"),
-        F.count("*").cast("long").alias("subflow_count"),
-        F.avg(F.col("_t").cast("double")).alias("subflow_turns_mean"),
-        F.avg("_c").alias("subflow_chars_mean"),
+    active = F.col("idle_periods") + 1
+    return g.select(
+        *key_cols,
+        "burst_count", "burst_dur_mean", "burst_dur_std", "burst_dur_max", "burst_dur_min",
+        active.alias("active_periods"),
+        (F.col("_duration") - F.col("total_idle_time")).alias("total_active_time"),
+        "idle_periods",
+        "total_idle_time",
+        active.alias("subflow_count"),
+        (F.col("_n") / active).alias("subflow_turns_mean"),
+        (F.col("_chars") / active).alias("subflow_chars_mean"),
     )

@@ -11,16 +11,20 @@ role/tool values and their transitions:
 - W8  bigram statistics: distinct transition pairs, sequence complexity
   = distinct / min(n-1, 10) (``flag_analysis.py:510-542``), most-common
   bigram count (``:585-617``).
-- W11 top-k via row_number.
+- W11 top-k: the most common bigram's count.
 
-Everything is lag() + conditional aggregation — no UDFs, fully
-codegen'd, one shuffle shared with the other conv-ordered windows.
+``sequence_features`` (the snapshot's transition module) computes all of
+them from one lagged window and a two-level aggregation; the other
+per-key operators here serve the catalog. Everything is lag() + conditional
+aggregation — no UDFs, fully codegen'd.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.islands import with_session_lags
 
 ORDER = ["ts", "turn_idx"]
 
@@ -37,125 +41,6 @@ def with_prev_role(
     w = Window.partitionBy(*keys).orderBy(*ORDER)
     return df.withColumn("prev_role", F.lag(role_col).over(w)).withColumn(
         "prev2_role", F.lag(role_col, 2).over(w)
-    )
-
-
-def role_counts(
-    df: DataFrame, key_cols: list[str], role_col: str = "role",
-    roles: tuple[str, ...] = ("user", "assistant", "system", "tool"),
-) -> DataFrame:
-    """A7: one conditional-count column per role value (cnt_<role>)."""
-    aggs = [
-        F.sum(F.when(F.col(role_col) == r, 1).otherwise(0)).cast("long").alias(f"cnt_{r}")
-        for r in roles
-    ]
-    return df.groupBy(*key_cols).agg(*aggs)
-
-
-def transition_counts(
-    df: DataFrame,
-    key_cols: list[str],
-    role_col: str = "role",
-    pairs: tuple[tuple[str, str], ...] = (
-        ("user", "assistant"),
-        ("assistant", "user"),
-        ("assistant", "tool"),
-        ("tool", "assistant"),
-        ("user", "user"),
-        ("assistant", "assistant"),
-    ),
-) -> DataFrame:
-    """A7/W7 exact-combination counts: trans_<a>_<b> per key.
-
-    The (x,x) self-pairs are the reference's "abnormal sequence"
-    detectors (SYN->SYN etc., ``flag_analysis.py:544-583``).
-    """
-    d = with_prev_role(df, key=key_cols, role_col=role_col)
-    aggs = [
-        F.sum(
-            F.when((F.col("prev_role") == a) & (F.col(role_col) == b), 1).otherwise(0)
-        ).cast("long").alias(f"trans_{a}_{b}")
-        for a, b in pairs
-    ]
-    return d.groupBy(*key_cols).agg(*aggs)
-
-
-def bigram_stats(
-    df: DataFrame, key_cols: list[str], role_col: str = "role"
-) -> DataFrame:
-    """W8: distinct bigrams, sequence complexity, most-common-bigram count.
-
-    complexity = distinct_bigrams / min(n_turns - 1, 10), 0 when n < 2
-    (``flag_analysis.py:526-537`` normalization).
-    """
-    d = with_prev_role(df, key=key_cols, role_col=role_col).filter(
-        F.col("prev_role").isNotNull()
-    )
-    per_pair = d.groupBy(
-        *key_cols, F.col("prev_role").alias("a"), F.col(role_col).alias("b")
-    ).agg(F.count("*").alias("pair_cnt"))
-    stats = per_pair.groupBy(*key_cols).agg(
-        F.count("*").cast("long").alias("distinct_bigrams"),
-        F.max("pair_cnt").cast("long").alias("top_bigram_count"),
-        F.sum("pair_cnt").cast("long").alias("n_bigrams"),
-    )
-    return stats.withColumn(
-        "seq_complexity",
-        F.col("distinct_bigrams")
-        / F.least(F.col("n_bigrams").cast("double"), F.lit(10.0)),
-    )
-
-
-def top_bigram(df: DataFrame, key_cols: list[str], role_col: str = "role") -> DataFrame:
-    """W11: the single most common (prev_role, role) pair per key, ties
-    broken lexicographically (deterministic)."""
-    d = with_prev_role(df, key=key_cols, role_col=role_col).filter(
-        F.col("prev_role").isNotNull()
-    )
-    per_pair = d.groupBy(
-        *key_cols, F.col("prev_role").alias("a"), F.col(role_col).alias("b")
-    ).agg(F.count("*").alias("pair_cnt"))
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("pair_cnt").desc(), F.col("a"), F.col("b")
-    )
-    return (
-        per_pair.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(*key_cols, "a", "b", F.col("pair_cnt").alias("top_pair_cnt"))
-    )
-
-
-def with_pattern_flags(
-    df: DataFrame,
-    key: str = "conv_id",
-    role_col: str = "role",
-    trigram: tuple[str, str, str] = ("user", "assistant", "tool"),
-) -> DataFrame:
-    """W6 handshake analog: mark rows completing the trigram pattern
-    prev2->prev->current == trigram."""
-    d = with_prev_role(df, key=key, role_col=role_col)
-    a, b, c = trigram
-    return d.withColumn(
-        "pattern_hit",
-        (
-            (F.col("prev2_role") == a)
-            & (F.col("prev_role") == b)
-            & (F.col(role_col) == c)
-        ).cast("int"),
-    )
-
-
-def handshake_per_key(
-    df: DataFrame,
-    key_cols: list[str],
-    role_col: str = "role",
-    trigram: tuple[str, str, str] = ("user", "assistant", "tool"),
-) -> DataFrame:
-    """W6 aggregate: has_handshake (any trigram hit) + hit count per key."""
-    d = with_pattern_flags(df, key=key_cols, role_col=role_col, trigram=trigram)
-    return d.groupBy(*key_cols).agg(
-        F.max("pattern_hit").cast("long").alias("has_handshake"),
-        F.sum("pattern_hit").cast("long").alias("handshake_count"),
     )
 
 
@@ -208,89 +93,6 @@ def composite_sequence_flags(
     )
 
 
-def fused_sequence_features(
-    df: DataFrame,
-    key_cols: list[str],
-    role_col: str = "role",
-    tool_col: str = "tool",
-    roles: tuple[str, ...] = ("user", "assistant", "system", "tool"),
-    pairs: tuple[tuple[str, str], ...] = (
-        ("user", "assistant"),
-        ("assistant", "user"),
-        ("assistant", "tool"),
-        ("tool", "assistant"),
-        ("user", "user"),
-        ("assistant", "assistant"),
-    ),
-    trigram: tuple[str, str, str] = ("user", "assistant", "tool"),
-    teardown_values: tuple[str, str] = ("tool", "assistant"),
-    abnormal_self: tuple[str, ...] = ("user",),
-    abnormal_pairs: tuple[tuple[str, str], ...] = (("assistant", "user"),),
-) -> DataFrame:
-    """All single-pass sequence aggregates — transition_counts +
-    handshake_per_key + composite_sequence_flags + contains_vs_exact_counts
-    — in ONE lagged window and ONE groupBy. Column-identical to joining
-    the four operators (property-tested in tests/test_transitions.py);
-    the registry uses this so the transition module costs one exchange
-    instead of four. bigram_stats/top_bigram stay separate (they need a
-    two-level per-pair aggregation)."""
-    d = with_prev_role(df, key=key_cols, role_col=role_col)
-    cur, prev, prev2 = F.col(role_col), F.col("prev_role"), F.col("prev2_role")
-
-    ta, tb = teardown_values
-    abnormal_hit = F.lit(False)
-    for v in abnormal_self:
-        abnormal_hit = abnormal_hit | ((prev == v) & (cur == v))
-    for a, b in abnormal_pairs:
-        abnormal_hit = abnormal_hit | ((prev == a) & (cur == b))
-    ga, gb, gc = trigram
-    pattern_hit = ((prev2 == ga) & (prev == gb) & (cur == gc)).cast("int")
-    has_tool = F.col(tool_col).isNotNull()
-
-    aggs = [
-        # transition_counts
-        *[
-            F.sum(F.when((prev == a) & (cur == b), 1).otherwise(0))
-            .cast("long")
-            .alias(f"trans_{a}_{b}")
-            for a, b in pairs
-        ],
-        # handshake_per_key
-        F.max(pattern_hit).cast("long").alias("has_handshake"),
-        F.sum(pattern_hit).cast("long").alias("handshake_count"),
-        # composite_sequence_flags
-        F.count("*").alias("_n"),
-        F.sum(F.when(cur == ta, 1).otherwise(0)).alias("_cnt_ta"),
-        F.sum(F.when(cur == tb, 1).otherwise(0)).alias("_cnt_tb"),
-        F.sum(F.when(abnormal_hit, 1).otherwise(0)).cast("long").alias("abnormal_count"),
-        # contains_vs_exact_counts
-        F.sum(F.when(has_tool, 1).otherwise(0)).cast("long").alias("cnt_contains_toolcall"),
-    ]
-    for r in roles:
-        aggs.append(
-            F.sum(F.when(cur == r, 1).otherwise(0)).cast("long").alias(f"cnt_contains_{r}")
-        )
-        aggs.append(
-            F.sum(F.when((cur == r) & has_tool, 1).otherwise(0))
-            .cast("long")
-            .alias(f"cnt_exact_{r}_tool")
-        )
-    g = d.groupBy(*key_cols).agg(*aggs)
-    return g.select(
-        *key_cols,
-        *[f"trans_{a}_{b}" for a, b in pairs],
-        "has_handshake",
-        "handshake_count",
-        (
-            (F.col("_n") >= 4) & (F.col("_cnt_ta") >= 2) & (F.col("_cnt_tb") >= 2)
-        ).cast("long").alias("has_teardown"),
-        (F.col("abnormal_count") > 0).cast("long").alias("has_abnormal"),
-        "abnormal_count",
-        "cnt_contains_toolcall",
-        *[c for r in roles for c in (f"cnt_contains_{r}", f"cnt_exact_{r}_tool")],
-    )
-
-
 def contains_vs_exact_counts(
     df: DataFrame,
     key_cols: list[str],
@@ -319,3 +121,111 @@ def contains_vs_exact_counts(
             .alias(f"cnt_exact_{r}_tool")
         )
     return df.groupBy(*key_cols).agg(*aggs)
+
+
+def sequence_features(
+    df: DataFrame,
+    key_cols: list[str],
+    role_col: str = "role",
+    tool_col: str = "tool",
+    roles: tuple[str, ...] = ("user", "assistant", "system", "tool"),
+    pairs: tuple[tuple[str, str], ...] = (
+        ("user", "assistant"),
+        ("assistant", "user"),
+        ("assistant", "tool"),
+        ("tool", "assistant"),
+        ("user", "user"),
+        ("assistant", "assistant"),
+    ),
+    trigram: tuple[str, str, str] = ("user", "assistant", "tool"),
+    teardown_values: tuple[str, str] = ("tool", "assistant"),
+    abnormal_self: tuple[str, ...] = ("user",),
+    abnormal_pairs: tuple[tuple[str, str], ...] = (("assistant", "user"),),
+) -> DataFrame:
+    """Every per-key sequence feature from ONE lagged window and a
+    two-level aggregation: per (key, previous role, role), then per key.
+
+    - A7/W7 ``trans_<a>_<b>``: exact-combination counts; the (x,x)
+      self-pairs are the reference's "abnormal sequence" detectors
+      (SYN->SYN etc., ``flag_analysis.py:544-583``).
+    - W6 ``has_handshake`` / ``handshake_count``: rows completing the
+      ``trigram`` prev2->prev->current (3-way handshake analog). Null
+      when no row can decide it (a one-turn session ending on the
+      trigram's last value).
+    - W7 ``has_teardown`` / ``has_abnormal`` / ``abnormal_count``: the
+      ``composite_sequence_flags`` semantics.
+    - A7 ``cnt_contains_*`` / ``cnt_exact_*_tool``: the
+      ``contains_vs_exact_counts`` semantics.
+    - W8 ``distinct_bigrams``, ``top_bigram_count`` (W11: the most common
+      pair's count), ``n_bigrams`` and ``seq_complexity`` = distinct /
+      min(n_bigrams, 10) (``flag_analysis.py:510-542``, ``:585-617``).
+      Null on a key without a bigram (one turn).
+
+    Pairs never span keys, so with (conv_id, session_id) sequences reset
+    at session boundaries, like the reference's per-flow extraction.
+    """
+    d = with_session_lags(df, key_cols, role_col=role_col)
+    prev, prev2, cur = F.col("_prev_role"), F.col("_prev2_role"), F.col(role_col)
+    ga, gb, gc = trigram
+    pattern_hit = ((prev2 == ga) & (prev == gb) & (cur == gc)).cast("int")
+    per_pair = d.groupBy(*key_cols, prev.alias("_a"), cur.alias("_b")).agg(
+        F.count("*").alias("_c"),
+        F.max(pattern_hit).alias("_hs_max"),
+        F.sum(pattern_hit).alias("_hs_sum"),
+        F.sum(F.col(tool_col).isNotNull().cast("long")).alias("_tool"),
+    )
+
+    a, b, c = F.col("_a"), F.col("_b"), F.col("_c")
+
+    def count_where(cond, v=c):
+        return F.sum(F.when(cond, v).otherwise(0)).cast("long")
+
+    abnormal_hit = F.lit(False)
+    for v in abnormal_self:
+        abnormal_hit = abnormal_hit | ((a == v) & (b == v))
+    for x, y in abnormal_pairs:
+        abnormal_hit = abnormal_hit | ((a == x) & (b == y))
+    ta, tb = teardown_values
+    bigram = a.isNotNull()
+    g = per_pair.groupBy(*key_cols).agg(
+        *[count_where((a == x) & (b == y)).alias(f"trans_{x}_{y}") for x, y in pairs],
+        F.max("_hs_max").cast("long").alias("has_handshake"),
+        F.sum("_hs_sum").cast("long").alias("handshake_count"),
+        F.sum(c).alias("_n"),
+        count_where(b == ta).alias("_cnt_ta"),
+        count_where(b == tb).alias("_cnt_tb"),
+        count_where(abnormal_hit).alias("abnormal_count"),
+        F.sum("_tool").cast("long").alias("cnt_contains_toolcall"),
+        *[
+            agg
+            for r in roles
+            for agg in (
+                count_where(b == r).alias(f"cnt_contains_{r}"),
+                count_where(b == r, F.col("_tool")).alias(f"cnt_exact_{r}_tool"),
+            )
+        ],
+        # sums/max over no bigram stay null, as a per-key count would not
+        F.sum(F.when(bigram, 1)).cast("long").alias("distinct_bigrams"),
+        F.max(F.when(bigram, c)).cast("long").alias("top_bigram_count"),
+        F.sum(F.when(bigram, c)).cast("long").alias("n_bigrams"),
+    )
+    return g.select(
+        *key_cols,
+        *[f"trans_{x}_{y}" for x, y in pairs],
+        "has_handshake",
+        "handshake_count",
+        (
+            (F.col("_n") >= 4) & (F.col("_cnt_ta") >= 2) & (F.col("_cnt_tb") >= 2)
+        ).cast("long").alias("has_teardown"),
+        (F.col("abnormal_count") > 0).cast("long").alias("has_abnormal"),
+        "abnormal_count",
+        "cnt_contains_toolcall",
+        *[x for r in roles for x in (f"cnt_contains_{r}", f"cnt_exact_{r}_tool")],
+        "distinct_bigrams",
+        "top_bigram_count",
+        "n_bigrams",
+        (
+            F.col("distinct_bigrams")
+            / F.least(F.col("n_bigrams").cast("double"), F.lit(10.0))
+        ).alias("seq_complexity"),
+    )

@@ -35,7 +35,6 @@ def run_resumable(
     key: str = "conv_id",
     n_buckets: int = 16,
     checksum_col: str | None = None,
-    concurrency: int = 1,
 ) -> dict:
     """Process bucket-by-bucket with a resume manifest.
 
@@ -43,14 +42,7 @@ def run_resumable(
     ``{out_dir}/bucket={b}`` and appends a manifest entry
     {rows, n_keys, checksum, seconds}. Already-completed buckets are
     skipped (idempotent restart).
-
-    ``concurrency`` > 1 submits that many bucket jobs to the SparkSession
-    at once (Spark schedules concurrent jobs; job-startup latency stops
-    serializing across buckets). Each bucket remains an independent
-    resume unit; the manifest is updated atomically under a lock.
     """
-    import threading
-
     os.makedirs(out_dir, exist_ok=True)
     manifest_path = os.path.join(out_dir, "_manifest.json")
     manifest: dict[str, dict] = {}
@@ -59,10 +51,10 @@ def run_resumable(
             manifest = json.load(f)
 
     turns = turns.withColumn("_bucket", bucket_col(key, n_buckets))
-    lock = threading.Lock()
-
-    def process(b: int) -> None:
+    for b in range(n_buckets):
         bk = str(b)
+        if manifest.get(bk, {}).get("status") == "done":
+            continue
         t0 = time.time()
         subset = turns.filter(F.col("_bucket") == b).drop("_bucket")
         out = build(subset)
@@ -85,22 +77,9 @@ def run_resumable(
         }
         # atomic update: a crash mid-write must not corrupt the manifest
         # (a truncated _manifest.json would defeat crash-resume entirely)
-        with lock:
-            manifest[bk] = entry
-            tmp = manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f, indent=2, sort_keys=True)
-            os.replace(tmp, manifest_path)
-
-    pending = [
-        b for b in range(n_buckets) if manifest.get(str(b), {}).get("status") != "done"
-    ]
-    if concurrency <= 1:
-        for b in pending:
-            process(b)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=concurrency) as ex:
-            list(ex.map(process, pending))
+        manifest[bk] = entry
+        tmp = manifest_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=2, sort_keys=True)
+        os.replace(tmp, manifest_path)
     return manifest

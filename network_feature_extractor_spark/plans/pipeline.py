@@ -1,23 +1,30 @@
 """End-to-end feature pipeline (the reference's full run(), SURVEY.md §3.1,
 re-expressed as one declarative DAG).
 
-    turns ──> sessionize (W5) ──> per-turn windowed features
-          │                        (W1 iat, W12 rolling, W13 ffill, A7 running counts)
+    turns ──> per-turn windows (W5 session id, W1 iat, W12 rolling,
+          │    W13 ffill, A7 running counts)
           │
-          ├─> per-session algebraic features (FlowStats analog, A3-A8)
-          ├─> per-session distribution features (Arrow UDF, A9-A13/W9/W10)
-          ├─> burst + active/idle stats (W3/W4)
-          │
-          └─> snapshot table (session features stamped at session end)
-                    │
-    per-turn ◄──────┘  as-of join (J1, strict) — zero leakage
+          └─> per-turn table (bucketed by conv_id when materialized)
+                │
+                ├─> core aggregation (FlowStats analog, A3-A8)     ┐ each opens
+                ├─> timing: bursts, active/idle, subflows (W3/W4)  │ with the same
+                ├─> transitions: bigrams, patterns (A7/W6-W8/W11)  ┘ session window
+                ├─> distribution features (Arrow, A9-A13/W9/W10)
+                │
+                └─> snapshot table (modules left-joined on the session key,
+                          │          stamped at session end)
+    per-turn ◄────────────┘  as-of join (J1, strict) — zero leakage
 
 Shuffle budget: ONE hash exchange on conv_id covers sessionize + every
-per-turn window (same partitioning, Catalyst reuses the sort); ONE
-exchange on (conv_id, session_id) covers all per-session aggregates; the
-as-of join adds one more on conv_id. Three shuffles total regardless of
-data size — at 10^12 turns each is a straight hash repartition with no
-driver involvement.
+per-turn window (same partitioning, Catalyst reuses the sort). With
+``materialize_dir`` the per-turn frame lands bucketed by conv_id and the
+snapshot phase plans no exchange: each module is one scan of the table,
+and the core, timing and transition modules each start from the same
+session-ordered window (functions/islands.py:with_session_lags; timing
+adds its burst-id cumsum) — 4 scans, 4 windows, 3 joins for all
+modules. The as-of attach adds one exchange on conv_id. Without
+materialization every snapshot branch recomputes the per-turn windows
+and pays its own exchange.
 """
 
 from __future__ import annotations
@@ -127,60 +134,30 @@ def _materialize_per_turn(
     pt: DataFrame, path: str, cfg: EngineConfig
 ) -> DataFrame:
     """Land the per-turn frame as a conv_id-bucketed, intra-bucket-sorted
-    external table and hand back the catalog-aware read — downstream
-    session-keyed work then needs no exchange (see run_pipeline).
-    Non-bucket-capable catalogs (or a restricted session) fall back to a
+    external table (one bucket per default-parallelism slot) and hand
+    back the catalog-aware read — downstream session-keyed work then
+    needs no exchange (see run_pipeline). A catalog that cannot take a
+    bucketed table (Spark raises AnalysisException) falls back to a
     plain parquet roundtrip — correctness-identical, one extra shuffle
-    per consumer."""
+    per consumer. Any other write failure propagates."""
     import hashlib
 
     from pyspark.errors import AnalysisException
 
     spark = pt.sparkSession
-    buckets = cfg.materialize_buckets or spark.sparkContext.defaultParallelism
     name = "pt_mat_" + hashlib.md5(path.encode()).hexdigest()[:12]
     try:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             pt.write.mode("overwrite")
-            .bucketBy(buckets, "conv_id")
+            .bucketBy(spark.sparkContext.defaultParallelism, "conv_id")
             .sortBy("conv_id", "ts", "turn_idx")
             .option("compression", "zstd")
             .option("path", path)
             .format("parquet")
             .saveAsTable(name)
         )
-        out = spark.table(name)
-        # marker consumed by clustered-aware consumers (r8): the
-        # bucketed table co-locates every conv_id — downstream grouped
-        # maps keyed (conv_id, ...) may skip their repartition. ONLY
-        # sound when auto-bucketed-scan is off (get_spark sets it off;
-        # a default-conf session may re-plan the scan un-bucketed when
-        # nothing else requires the distribution), so the marker is
-        # stamped iff the active session guarantees bucketed scans.
-        if (
-            spark.conf.get(
-                "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
-            ).lower()
-            == "false"
-        ):
-            out._nfe_assume_clustered = True
-        return out
-    except Exception as ex:  # pragma: no cover
-        # ONLY catalog/bucketing-capability failures fall back to plain
-        # parquet (a restricted session, a non-bucket-capable catalog);
-        # capability errors surface either as AnalysisException or as a
-        # JVM error whose message says unsupported/catalog/metastore.
-        # Genuine write failures — disk full, corrupt upstream data, an
-        # interrupted job — propagate: silently re-writing the full
-        # frame would mask them (r4 ADVICE).
-        msg = str(ex).lower()
-        capability = isinstance(ex, AnalysisException) or any(
-            t in msg
-            for t in ("unsupported", "not supported", "catalog", "metastore", "bucket")
-        )
-        if not capability:
-            raise
+    except AnalysisException as ex:
         import warnings
 
         warnings.warn(
@@ -192,6 +169,22 @@ def _materialize_per_turn(
         )
         pt.write.mode("overwrite").option("compression", "zstd").parquet(path)
         return spark.read.parquet(path)
+    out = spark.table(name)
+    # marker consumed by clustered-aware consumers (r8): the
+    # bucketed table co-locates every conv_id — downstream grouped
+    # maps keyed (conv_id, ...) may skip their repartition. ONLY
+    # sound when auto-bucketed-scan is off (get_spark sets it off;
+    # a default-conf session may re-plan the scan un-bucketed when
+    # nothing else requires the distribution), so the marker is
+    # stamped iff the active session guarantees bucketed scans.
+    if (
+        spark.conf.get(
+            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "true"
+        ).lower()
+        == "false"
+    ):
+        out._nfe_assume_clustered = True
+    return out
 
 
 def run_pipeline(

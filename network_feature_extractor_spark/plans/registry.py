@@ -9,14 +9,25 @@ the snapshot table with left joins on the session key. Disabled modules
 never enter the logical plan (cheaper than runtime gating — Catalyst
 never sees their expressions).
 
+The core aggregation and the timing and transition modules each start
+from the same step, ``functions/islands.py:with_session_lags`` (one
+window over the session ordered by ts, turn_idx: gap, first-row flag,
+previous two roles), and derive bursts, active/idle, bigrams and
+patterns from its columns by aggregation alone. Over the bucketed
+per-turn table the all-modules snapshot plans one scan per module (4),
+4 windows (timing adds its burst-id cumsum), 3 joins and no exchange;
+the lean one (core + text_length) 2 scans and 1 window.
+
 Module -> reference-extractor correspondence:
   basic_metrics        -> src/feature_extraction/basic_metrics.py (+ the
                           FlowStats core, flow_tracker.py:178-241)
   text_length          -> packet_length.py (quantiles/hist/moments live
                           in the distribution module's output columns)
   timing_metrics       -> timing_metrics.py (IAT stats in the core agg;
-                          bursts, active/idle, IAT entropy, FFT here)
-  transition_analysis  -> flag_analysis.py (bigrams, patterns, top pair)
+                          bursts, active/idle, subflows here; IAT
+                          entropy and FFT in text_length's output)
+  transition_analysis  -> flag_analysis.py (bigrams, patterns, top pair
+                          count)
 """
 
 from __future__ import annotations
@@ -34,19 +45,9 @@ FeatureModule = Callable[[DataFrame, EngineConfig], DataFrame]
 
 
 def _timing(pt: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Bursts (0.1 s islands) + fused active/idle + subflow metrics
-    (1.0 s islands — a subflow IS an activity island, CICFlowMeter
-    convention; the reference *names* ``subflow_analysis`` in config,
-    ``config/config.yaml:25-26``, but never ships the module). Two
-    island passes instead of three."""
-    bursts = sessionize.burst_stats(
-        pt, SESSION_KEY, threshold=cfg.burst_gap_s, order_cols=["ts", "turn_idx"]
+    return sessionize.timing_stats(
+        pt, SESSION_KEY, burst_gap=cfg.burst_gap_s, activity_timeout=cfg.activity_timeout_s
     )
-    ai_sub = sessionize.active_idle_subflow_stats(
-        pt, SESSION_KEY, activity_timeout=cfg.activity_timeout_s,
-        order_cols=["ts", "turn_idx"],
-    )
-    return bursts.join(ai_sub, SESSION_KEY, "left")
 
 
 def _text_length(pt: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -57,11 +58,7 @@ def _text_length(pt: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 
 def _transitions(pt: DataFrame, cfg: EngineConfig) -> DataFrame:
-    # all single-pass sequence aggregates fused into one window + one
-    # groupBy (4 exchanges -> 1); bigram stats need a two-level agg
-    fused = transitions.fused_sequence_features(pt, SESSION_KEY)
-    bg = transitions.bigram_stats(pt, SESSION_KEY)
-    return fused.join(bg, SESSION_KEY, "left")
+    return transitions.sequence_features(pt, SESSION_KEY)
 
 
 MODULES: dict[str, FeatureModule] = {

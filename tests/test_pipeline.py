@@ -243,26 +243,6 @@ def test_duration_histogram_cumulative(spark):
     assert list(h.sort_index().values) == sorted(h.values)
 
 
-def test_run_resumable_concurrent_matches_serial(spark, turns, tmp_path):
-    from network_feature_extractor_spark.plans import checkpoint
-
-    def build(subset):
-        return subset.selectExpr("conv_id", "turn_idx", "length(text) as L")
-
-    out1 = str(tmp_path / "serial")
-    out2 = str(tmp_path / "conc")
-    m1 = checkpoint.run_resumable(turns, out1, build, n_buckets=4, checksum_col="conv_id")
-    m2 = checkpoint.run_resumable(
-        turns, out2, build, n_buckets=4, checksum_col="conv_id", concurrency=4
-    )
-    assert {k: (v["rows"], v["checksum"]) for k, v in m1.items()} == {
-        k: (v["rows"], v["checksum"]) for k, v in m2.items()
-    }
-    a = spark.read.parquet(out1 + "/bucket=*").count()
-    b = spark.read.parquet(out2 + "/bucket=*").count()
-    assert a == b == turns.count()
-
-
 def test_pipeline_asof_ttl(spark, turns):
     """asof_ttl_s gates the snapshot attach: with a TTL, stale attaches
     are nulled + flagged and fresh ones identical to the ungated run;
@@ -297,3 +277,44 @@ def test_pipeline_asof_ttl(spark, turns):
         u.loc[fresh, "prev_n_turns"].astype(float),
         equal_nan=True,
     )
+
+
+def _failing_save_as_table(monkeypatch, ex: Exception) -> None:
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    def fail(self, *args, **kwargs):
+        raise ex
+
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", fail)
+
+
+def test_materialize_write_error_propagates(spark, turns, tmp_path, monkeypatch):
+    """A failed bucketed write is not retried as plain parquet, even when
+    its message names a bucket file."""
+    import pytest
+
+    from network_feature_extractor_spark.plans.pipeline import _materialize_per_turn
+
+    _failing_save_as_table(
+        monkeypatch, RuntimeError("No space left on device: part-00000-bucket-00001.parquet")
+    )
+    path = tmp_path / "pt"
+    with pytest.raises(RuntimeError, match="bucket-00001"):
+        _materialize_per_turn(turns, str(path), EngineConfig())
+    assert not path.exists()
+
+
+def test_materialize_falls_back_when_catalog_rejects_buckets(spark, turns, tmp_path, monkeypatch):
+    """A catalog that cannot take the bucketed table (AnalysisException)
+    gets the plain parquet roundtrip, without the clustered marker."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from network_feature_extractor_spark.plans.pipeline import _materialize_per_turn
+
+    _failing_save_as_table(monkeypatch, AnalysisException("bucketed tables are not supported"))
+    pt = turns.select("conv_id", "turn_idx", "ts")
+    with pytest.warns(RuntimeWarning, match="plain parquet"):
+        out = _materialize_per_turn(pt, str(tmp_path / "pt"), EngineConfig())
+    assert not getattr(out, "_nfe_assume_clustered", False)
+    assert out.exceptAll(pt).count() == 0 and out.count() == pt.count()

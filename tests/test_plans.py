@@ -383,3 +383,41 @@ def test_decayed_features_single_exchange_partial_agg(spark, turns):
     plan = _plan(out)
     assert plan.count("Exchange") == 1, plan.count("Exchange")
     assert "partial_count" in plan or "partial" in plan.lower(), plan[:2000]
+
+
+def _node_counts(df) -> dict[str, int]:
+    """Scan, Window and Join operators of the physical plan."""
+    import re
+
+    nodes = re.findall(r"^[\s:+\-|]*\*?(?:\(\d+\) )?([A-Za-z]+)", _plan(df), re.M)
+    return {
+        "scans": sum(n in ("FileScan", "Scan", "BatchScan") for n in nodes),
+        "windows": nodes.count("Window"),
+        "joins": sum(n.endswith("Join") for n in nodes),
+    }
+
+
+def test_snapshot_modules_share_one_session_window(spark, turns, tmp_path):
+    """Over the bucketed per-turn table each snapshot module is one scan
+    branch: all modules plan at most 4 Window, 4 scan and 3 join nodes
+    (the core aggregation, timing with its burst cumsum, transitions),
+    the lean config (core + text_length) 1 Window and 2 scans."""
+    from network_feature_extractor_spark.plans.pipeline import (
+        _materialize_per_turn,
+        session_snapshot_table,
+    )
+
+    cfg = EngineConfig()
+    pt = per_turn_features(turns, cfg).withColumn("text_len", F.length("text").cast("double"))
+    mat = _materialize_per_turn(pt, str(tmp_path / "pt"), cfg)
+    snap_in = mat.select("conv_id", "session_id", "role", "text_len", "tool", "ts", "turn_idx")
+    snap_in._nfe_assume_clustered = getattr(mat, "_nfe_assume_clustered", False)
+
+    full = _node_counts(session_snapshot_table(snap_in, cfg))
+    assert full["windows"] <= 4 and full["scans"] <= 4 and full["joins"] <= 3, full
+    lean = _node_counts(
+        session_snapshot_table(
+            snap_in, EngineConfig(enabled_features=("basic_metrics", "text_length"))
+        )
+    )
+    assert lean["windows"] <= 1 and lean["scans"] <= 2, lean

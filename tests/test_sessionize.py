@@ -35,24 +35,50 @@ def test_burst_stats_split(spark, turns, turns_pd):
         assert abs(r["burst_dur_max"] - mx) < 1e-6, conv_id
 
 
+def _islands(ets: np.ndarray, threshold: float) -> np.ndarray:
+    """0-based island id per row: split where the gap exceeds threshold."""
+    return np.concatenate([[0], np.cumsum(np.diff(ets) > threshold)])
+
+
 def test_active_idle_accounting(spark, turns, turns_pd):
+    """The timing module per (conv, session) against a pandas islands
+    oracle: 1.0 s activity islands give active/idle and subflows, 0.1 s
+    islands give bursts."""
+    from network_feature_extractor_spark.config import EngineConfig
+    from network_feature_extractor_spark.plans.registry import MODULES
+
     got = (
-        sessionize.active_idle_stats(turns, ["conv_id"], activity_timeout=1.0)
+        MODULES["timing_metrics"](sessionize.with_session_id(turns), EngineConfig())
         .toPandas()
-        .sort_values("conv_id")
-        .reset_index(drop=True)
+        .set_index(["conv_id", "session_id"])
     )
-    for conv_id, g in turns_pd.groupby("conv_id", sort=True):
-        g = g.sort_values(["ts", "turn_idx"], kind="mergesort")
-        ets = g["ts"].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
-        gaps = np.diff(ets)
-        idle = gaps[gaps > 1.0]
-        r = got[got["conv_id"] == conv_id].iloc[0]
-        assert r["idle_periods"] == len(idle), conv_id
-        assert abs(r["total_idle_time"] - idle.sum()) < 1e-5, conv_id
-        # active + idle spans partition the total duration
-        total = ets[-1] - ets[0]
-        assert abs((r["total_active_time"] + r["total_idle_time"]) - total) < 1e-5
+    n_sessions = 0
+    for conv_id, c in turns_pd.groupby("conv_id", sort=True):
+        c = c.sort_values(["ts", "turn_idx"], kind="mergesort")
+        ets_c = c["ts"].astype("datetime64[us]").astype("int64").to_numpy() / 1e6
+        lens_c = c["text"].str.len().to_numpy(dtype=float)
+        sids = _islands(ets_c, sessionize.SESSION_GAP_S)
+        for sid in np.unique(sids):
+            ets, lens = ets_c[sids == sid], lens_c[sids == sid]
+            r = got.loc[(conv_id, sid)]
+            n_sessions += 1
+            act = _islands(ets, 1.0)
+            gaps = np.diff(ets)
+            idle = gaps[gaps > 1.0]
+            spans = [np.ptp(ets[act == i]) for i in np.unique(act)]
+            assert r["active_periods"] == len(spans) == r["subflow_count"], conv_id
+            assert r["idle_periods"] == len(idle), conv_id
+            assert abs(r["total_idle_time"] - idle.sum()) < 1e-5, conv_id
+            assert abs(r["total_active_time"] - sum(spans)) < 1e-5, conv_id
+            assert abs(r["subflow_turns_mean"] - len(ets) / len(spans)) < 1e-9, conv_id
+            assert abs(r["subflow_chars_mean"] - lens.sum() / len(spans)) < 1e-9, conv_id
+            burst = _islands(ets, 0.1)
+            durs = [np.ptp(ets[burst == i]) for i in np.unique(burst)]
+            assert r["burst_count"] == len(durs), conv_id
+            assert abs(r["burst_dur_max"] - max(durs)) < 1e-6, conv_id
+            assert abs(r["burst_dur_min"] - min(durs)) < 1e-6, conv_id
+            assert abs(r["burst_dur_mean"] - np.mean(durs)) < 1e-6, conv_id
+    assert n_sessions == len(got)
 
 
 def test_session_gap_threshold_behaviour(spark, turns):
@@ -112,36 +138,53 @@ def test_pipeline_sampling_keeps_whole_conversations(spark, turns):
 
 
 def test_fused_active_idle_subflows_equals_individual(spark, turns):
+    """timing_stats derives active/idle and subflows from gap algebra in
+    one pass; an explicit activity-island grouping (islands, then a lag
+    over the islands for the idle gaps between them) must agree."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from network_feature_extractor_spark.functions.islands import with_island_id
-    from network_feature_extractor_spark.operators import sessionize
-    from network_feature_extractor_spark.operators.sessionize import with_session_id
+    from network_feature_extractor_spark.functions.stats import epoch_seconds
 
-    d = with_session_id(turns)
+    d = sessionize.with_session_id(turns)
     key = ["conv_id", "session_id"]
-    fused = sessionize.active_idle_subflow_stats(
-        d, key, activity_timeout=1.0, order_cols=["ts", "turn_idx"]
-    ).toPandas().sort_values(key).reset_index(drop=True)
-
-    ai = sessionize.active_idle_stats(
-        d, key, activity_timeout=1.0, order_cols=["ts", "turn_idx"]
+    cols = [
+        "active_periods", "total_active_time", "idle_periods", "total_idle_time",
+        "subflow_count", "subflow_turns_mean", "subflow_chars_mean",
+    ]
+    fused = (
+        sessionize.timing_stats(d, key, activity_timeout=1.0)
+        .select(*key, *cols)
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
     )
+
     sub = with_island_id(d, key, "ts", 1.0, "_s", order_cols=["ts", "turn_idx"])
     per = sub.groupBy(*key, "_s").agg(
-        F.count("*").alias("_t"), F.sum(F.length("text").cast("double")).alias("_c")
+        F.min(epoch_seconds("ts")).alias("_t0"),
+        F.max(epoch_seconds("ts")).alias("_t1"),
+        F.count("*").alias("_t"),
+        F.sum(F.length("text").cast("double")).alias("_c"),
     )
-    sf = per.groupBy(*key).agg(
-        F.count("*").cast("long").alias("subflow_count"),
-        F.avg("_t").alias("subflow_turns_mean"),
-        F.avg("_c").alias("subflow_chars_mean"),
+    w = Window.partitionBy(*key).orderBy("_s")
+    per = per.withColumn("_idle", F.col("_t0") - F.lag("_t1").over(w))
+    individual = (
+        per.groupBy(*key)
+        .agg(
+            F.count("*").alias("active_periods"),
+            F.sum(F.col("_t1") - F.col("_t0")).alias("total_active_time"),
+            F.count("_idle").alias("idle_periods"),
+            F.coalesce(F.sum("_idle"), F.lit(0.0)).alias("total_idle_time"),
+            F.count("*").alias("subflow_count"),
+            F.avg("_t").alias("subflow_turns_mean"),
+            F.avg("_c").alias("subflow_chars_mean"),
+        )
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
     )
-    joined = ai.join(sf, key).toPandas().sort_values(key).reset_index(drop=True)
-    assert set(fused.columns) == set(joined.columns)
-    for c in fused.columns:
-        if fused[c].dtype == object:
-            assert (fused[c] == joined[c]).all(), c
-        else:
-            import numpy as np
-
-            assert np.allclose(fused[c].astype(float), joined[c].astype(float)), c
+    assert (fused[key] == individual[key]).all().all()
+    for c in cols:
+        assert np.allclose(fused[c].astype(float), individual[c].astype(float), atol=1e-5), c

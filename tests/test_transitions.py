@@ -1,12 +1,23 @@
-"""Sequence/transition operator semantics, incl. the session-boundary
-reset rule (sequences never span a session split, matching the
-reference's per-flow extraction) and the W7 composite flags."""
+"""Sequence/transition semantics of the transition module and the
+per-key operators, incl. the session-boundary reset rule (sequences
+never span a session split, matching the reference's per-flow
+extraction) and the W7 composite flags."""
 
+from collections import Counter
 from datetime import datetime, timedelta
 
+import numpy as np
+import pandas as pd
 import pytest
 
+from network_feature_extractor_spark.config import EngineConfig
 from network_feature_extractor_spark.operators import transitions
+from network_feature_extractor_spark.plans.registry import MODULES
+
+PAIRS = [
+    ("user", "assistant"), ("assistant", "user"), ("assistant", "tool"),
+    ("tool", "assistant"), ("user", "user"), ("assistant", "assistant"),
+]
 
 
 def _turns(spark, rows):
@@ -30,9 +41,18 @@ def _turns(spark, rows):
     )
 
 
+def _module(d):
+    return (
+        MODULES["transition_analysis"](d, EngineConfig())
+        .toPandas()
+        .set_index(["conv_id", "session_id"])
+    )
+
+
 def test_bigrams_reset_at_session_boundary(spark):
-    # conv c0: session 0 ends on 'user', session 1 starts with 'assistant'
+    # c0: session 0 ends on 'user', session 1 starts with 'assistant'
     # -> the (user, assistant) pair across the boundary must NOT count.
+    # c1: 'user' | 'user' split across sessions -> not an abnormal repeat.
     d = _turns(
         spark,
         [
@@ -40,26 +60,34 @@ def test_bigrams_reset_at_session_boundary(spark):
             ("c0", 0, 1, "user"),
             ("c0", 1, 2, "assistant"),
             ("c0", 1, 3, "user"),
+            ("c1", 0, 0, "user"),
+            ("c1", 1, 1, "user"),
         ],
     )
-    tc = (
-        transitions.transition_counts(d, ["conv_id", "session_id"])
-        .toPandas()
-        .set_index("session_id")
-    )
-    assert tc.loc[0, "trans_user_user"] == 1
-    assert tc.loc[0, "trans_user_assistant"] == 0  # boundary pair excluded
-    assert tc.loc[1, "trans_user_assistant"] == 0
-    assert tc.loc[1, "trans_assistant_user"] == 1
-
-    bg = (
-        transitions.bigram_stats(d, ["conv_id", "session_id"])
-        .toPandas()
-        .set_index("session_id")
-    )
+    out = _module(d)
+    s0, s1 = out.loc[("c0", 0)], out.loc[("c0", 1)]
+    assert s0["trans_user_user"] == 1
+    assert s0["trans_user_assistant"] == 0  # boundary pair excluded
+    assert s1["trans_user_assistant"] == 0
+    assert s1["trans_assistant_user"] == 1
     # n_bigrams = n_turns - 1 per session (the documented denominator)
-    assert bg.loc[0, "n_bigrams"] == 1
-    assert bg.loc[1, "n_bigrams"] == 1
+    assert s0["n_bigrams"] == 1 and s1["n_bigrams"] == 1
+    # user->user (self repeat) in session 0, assistant->user (pair) in 1
+    assert s0["abnormal_count"] == 1 and s1["abnormal_count"] == 1
+    assert (out.loc["c1", "abnormal_count"] == 0).all()
+    assert (out.loc["c1", "trans_user_user"] == 0).all()
+
+
+def test_one_turn_sessions_keep_null_bigrams_and_handshake(spark):
+    """A one-turn session has no bigram, so its bigram columns are null;
+    a one-turn 'tool' session cannot decide the user->assistant->tool
+    trigram, so its handshake columns are null too."""
+    d = _turns(spark, [("c0", 0, 0, "tool"), ("c1", 0, 0, "user")])
+    out = _module(d)
+    for c in ("distinct_bigrams", "top_bigram_count", "n_bigrams", "seq_complexity"):
+        assert out[c].isna().all(), c
+    assert out.loc[("c0", 0), ["has_handshake", "handshake_count"]].isna().all()
+    assert out.loc[("c1", 0), "has_handshake"] == 0
 
 
 def test_composite_teardown_flag(spark):
@@ -155,16 +183,62 @@ def test_contains_vs_exact_counts(spark):
     assert out["cnt_exact_tool_tool"] == 1
 
 
-@pytest.mark.parametrize("op", ["transition_counts", "bigram_stats", "top_bigram"])
-def test_single_key_callers_unchanged(spark, op):
-    # string key (legacy single-key call) still works
+_ONE_PAIR = {f"trans_{a}_{b}": int((a, b) == ("user", "assistant")) for a, b in PAIRS}
+
+
+@pytest.mark.parametrize(
+    "op, expected",
+    [
+        # the transition-count, bigram and top-bigram columns now all come
+        # from sequence_features; each case checks its own columns
+        pytest.param("sequence_features", _ONE_PAIR, id="transition_counts"),
+        pytest.param(
+            "sequence_features",
+            {"distinct_bigrams": 1, "n_bigrams": 1, "seq_complexity": 1.0},
+            id="bigram_stats",
+        ),
+        pytest.param("sequence_features", {"top_bigram_count": 1}, id="top_bigram"),
+        pytest.param("composite_sequence_flags", {}, id="composite_sequence_flags"),
+        pytest.param("contains_vs_exact_counts", {}, id="contains_vs_exact_counts"),
+    ],
+)
+def test_single_key_callers_unchanged(spark, op, expected):
+    # a one-column key list works as well as (conv_id, session_id)
     d = _turns(spark, [("c0", 0, 0, "user"), ("c0", 0, 1, "assistant")])
     fn = getattr(transitions, op)
     out = fn(d, ["conv_id"]).toPandas()
     assert len(out) == 1
+    for c, v in expected.items():
+        assert out.loc[0, c] == v, c
 
 
-def test_fused_sequence_features_equals_individual_ops(spark):
+def _sequence_oracle(rows) -> pd.DataFrame:
+    """Per (conv, session), from the role sequence in turn order."""
+    seqs: dict = {}
+    for conv, sid, _, role, _tool in sorted(rows, key=lambda r: (r[0], r[1], r[2])):
+        seqs.setdefault((conv, sid), []).append(role)
+    out = {}
+    for key, seq in seqs.items():
+        pairs = Counter(zip(seq, seq[1:]))
+        hits = sum(t == ("user", "assistant", "tool") for t in zip(seq, seq[1:], seq[2:]))
+        n = len(seq) - 1
+        row = {f"trans_{a}_{b}": pairs[(a, b)] for a, b in PAIRS}
+        row.update(
+            has_handshake=int(hits > 0),
+            handshake_count=hits,
+            distinct_bigrams=len(pairs),
+            top_bigram_count=max(pairs.values()),
+            n_bigrams=n,
+            seq_complexity=len(pairs) / min(n, 10),
+        )
+        out[key] = row
+    return pd.DataFrame.from_dict(out, orient="index")
+
+
+def test_transition_module_matches_operators_and_oracle(spark):
+    """The transition module's columns equal the kept per-key operators
+    (composite flags, contains/exact counts) and a pandas sequence oracle
+    (transition counts, handshake, bigram statistics)."""
     rows = []
     roles = ["user", "assistant", "tool", "user", "user", "assistant",
              "system", "assistant", "tool", "assistant"]
@@ -175,16 +249,17 @@ def test_fused_sequence_features_equals_individual_ops(spark):
                              "search" if (i + c) % 3 == 0 else None))
     d = _turns(spark, rows)
     key = ["conv_id", "session_id"]
-    fused = transitions.fused_sequence_features(d, key).toPandas()
-    joined = (
-        transitions.transition_counts(d, key)
-        .join(transitions.handshake_per_key(d, key), key)
-        .join(transitions.composite_sequence_flags(d, key), key)
+    got = _module(d)
+    ops = (
+        transitions.composite_sequence_flags(d, key)
         .join(transitions.contains_vs_exact_counts(d, key), key)
         .toPandas()
+        .set_index(key)
     )
-    assert set(fused.columns) == set(joined.columns)
-    f = fused.sort_values(key).reset_index(drop=True)
-    j = joined.sort_values(key).reset_index(drop=True)[fused.columns]
-    for c in fused.columns:
-        assert (f[c] == j[c]).all(), c
+    exp = _sequence_oracle(rows)
+    assert sorted(got.index) == sorted(ops.index) == sorted(exp.index)
+    assert set(got.columns) == set(ops.columns) | set(exp.columns)
+    for c in ops.columns:
+        assert (got.loc[ops.index, c] == ops[c]).all(), c
+    for c in exp.columns:
+        assert np.allclose(got.loc[exp.index, c].astype(float), exp[c].astype(float)), c
