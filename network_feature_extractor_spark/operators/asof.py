@@ -8,28 +8,37 @@ earlier-or-equal (``strict=False``). Strict mode is the zero-temporal-
 leakage guarantee: a snapshot taken at exactly a turn's timestamp is NOT
 visible to that turn.
 
+The latest right row is attached WHOLE: a null value in it stays null
+rather than being filled from an older row, so every attached column and
+the matched timestamp come from one snapshot (pandas ``merge_asof`` and
+DuckDB ``ASOF JOIN`` semantics). Equal-timestamp right rows tie-break by
+ascending value order, Spark's nulls first: the largest wins.
+
 Spark has no native ASOF JOIN. We build it as a **sort-merge as-of in one
 shuffle** via the union trick:
 
-    union(left tagged k_l, right tagged k_r)
-      -> Window.partitionBy(key).orderBy(ts, kind, seq)
-      -> last(right_cols, ignorenulls=True) over unbounded-preceding
-      -> filter back to left rows
+    union(left tagged (k_l, null _row), right tagged (k_r, _row))
+      -> Window.partitionBy(key).orderBy(_ets, _k, _row)
+      -> last(_row, ignorenulls=True) over unbounded-preceding
+      -> filter back to left rows, unpack _row
 
-The tag ordering encodes strictness: strict => left rows sort *before*
-right rows at equal ts, so the running ``last()`` cannot see an equal-ts
-snapshot. This compiles to a single Exchange(hashpartition(key)) + Sort +
-WindowExec — exactly the "sort-merge as-of join over range-partitioned
+``_row = struct(_ts, *value_cols)`` is one non-null slot per right row,
+so the window runs ONE running ``last()`` whatever the attach width. The
+tag ordering encodes strictness: strict => left rows sort *before* right
+rows at equal ts, so the running ``last()`` cannot see an equal-ts
+snapshot. This compiles to a single Exchange(hashpartition(key)) + Sort
++ WindowExec — the "sort-merge as-of join over range-partitioned
 (conv_id, ts) sorted partitions" the north rule asks for, with zero
 per-row Python.
 
 Skew: a window partition is one conv_id; a pathologically hot
 conversation (10^8 turns at 10^12 scale) serializes on one task. AQE
 splits skewed *joins* but not window partitions, so ``asof_join_salted``
-breaks hot conversations into time blocks: per-block carry-in state is
+breaks hot conversations into time blocks: per-block carry-in rows are
 precomputed by a tiny block-level cumulative window, then each block
-windows independently under partition key (conv_id, block). Equivalence
-with the direct path is property-tested (tests/test_asof.py).
+runs the same union window under partition key (conv_id, block).
+Equivalence with the direct path is property-tested
+(tests/test_asof_property.py).
 """
 
 from __future__ import annotations
@@ -40,66 +49,39 @@ from pyspark.sql import functions as F
 from ..functions.stats import epoch_seconds
 
 
-def _right_fill_states(
-    right_tagged: DataFrame,
-    key: str,
+def _attach_latest(
+    left_tagged: DataFrame,
+    right_rows: DataFrame,
+    parts: list[str],
+    left_cols: list[str],
     value_cols: list[str],
-    extra_part_cols: list[str] | None = None,
+    lk: int,
+    attach_ts_as: str,
 ) -> DataFrame:
-    """Fold tagged right-side rows into per-row *fill states*.
+    """The one union window behind both join functions.
 
-    Input columns: ``key`` (+ ``extra_part_cols``), ``_ets``, ``_k``,
-    ``_ats`` (attach timestamp carried by the row) and ``value_cols``.
-    Output: one row per (key[, extra], _ets, _k) carrying a single
-    ``_state`` struct = the per-column last-non-null fold of every right
-    row up to and including that position (window order ``_ets, _k,
-    struct(value_cols)`` — the engine's equal-ts tie-break convention).
-
-    Why: the big union window downstream then needs ONE running
-    ``last(_state)`` instead of one running last per value column, and
-    left rows carry a single nullable struct slot through the exchange
-    instead of |value_cols| fixed-width null slots (guide §2.3 "shuffle
-    fewer bytes" + §8 "decide with small rows"). Per-column semantics
-    are preserved exactly: state(R).c == last non-null c over rights
-    <= R, so last(_state).c at any left row equals the old per-column
-    ``last(c, ignorenulls)`` — including nulls before any non-null.
+    ``left_tagged``: the left rows plus ``parts``, ``_ets`` and ``_k =
+    lk``. ``right_rows``: ``parts``, ``_ets``, ``_k`` and one non-null
+    ``_row = struct(_ts, *value_cols)``. Returns ``left_cols``, the
+    unpacked value columns of the latest visible ``_row`` and its
+    ``_ts`` as ``attach_ts_as``.
     """
-    parts = [key, *(extra_part_cols or [])]
-    ord_struct = F.struct(*[F.col(c) for c in value_cols])
-    rw = (
+    u = left_tagged.unionByName(right_rows, allowMissingColumns=True)
+    w = (
         Window.partitionBy(*parts)
-        .orderBy("_ets", "_k", ord_struct)
+        .orderBy("_ets", "_k", "_row")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    folded = right_tagged.select(
-        *parts,
-        "_ets",
-        "_k",
-        ord_struct.alias("_ord"),
-        F.struct(
-            F.last("_ats", ignorenulls=True).over(rw).alias("_ts"),
-            *[
-                F.last(c, ignorenulls=True).over(rw).alias(c)
-                for c in value_cols
-            ],
-        ).alias("_st"),
-    )
-    # one state per (key, ts, tag): the max-_ord row is LAST in window
-    # order among equal-ts rows, so its state folds all of them. The
-    # groupBy reuses the fold window's HashPartitioning(key) — no new
-    # exchange (subset rule).
-    return folded.groupBy(*parts, "_ets", "_k").agg(
-        F.max(F.struct(F.col("_ord"), F.col("_st"))).getField("_st").alias("_state")
+    filled = u.select("*", F.last("_row", ignorenulls=True).over(w).alias("_f"))
+    return filled.filter(F.col("_k") == lk).select(
+        *left_cols,
+        *[F.col(f"_f.{c}").alias(c) for c in value_cols],
+        F.col("_f._ts").alias(attach_ts_as),
     )
 
 
-# minimum value-column count for the folded-state form: the fold adds
-# two small stages (right-side window + reduce), worthwhile only when it
-# removes several running lasts + several per-row null slots from the
-# big union exchange. Measured crossover (sf1.0, 32 cores): 1-2 columns
-# lose ~0.3-0.9 s to the extra stages; the 40-column pipeline attach
-# gains multiples of that.
-_FOLD_MIN_COLS = 4
+def _row_struct(ts, value_cols: list[str]):
+    return F.struct(ts.alias("_ts"), *[F.col(c) for c in value_cols])
 
 
 def asof_join(
@@ -111,32 +93,14 @@ def asof_join(
     value_cols: list[str] | None = None,
     strict: bool = True,
     attach_ts_as: str = "asof_ts",
-    fold_states: bool | None = None,
 ) -> DataFrame:
-    """Attach the latest-preceding right-row values to each left row.
+    """Attach the latest-preceding right row, whole, to each left row.
 
     Left rows with no preceding right row get nulls (leading-null case).
     Right values come back under their own names; the matched snapshot
-    timestamp (epoch seconds, double) under ``attach_ts_as``.
-
-    Two physical forms, same results (differentially tested):
-
-    - per-column (``fold_states=False``): the classic union window with
-      one running ``last(c, ignorenulls)`` per value column — fewest
-      stages, right for narrow attaches (1-3 columns).
-    - folded (``fold_states=True``, r8): the right side is first folded
-      into per-row fill states (`_right_fill_states` — a window +
-      groupBy over the SMALL side only), then the big union window runs
-      ONE ``last(_state)``, its sort key is plain ``(_ets, _k)`` with no
-      |value_cols|-field struct comparator, and left rows carry a single
-      nullable struct slot through the big exchange instead of one
-      fixed-width null slot per value column (~8 B x |value_cols| x
-      |left| shuffle+sort bytes saved — the pipeline's 40-column attach
-      saves ~320 B/row). Per-column ``LAST_VALUE(c IGNORE NULLS)``
-      semantics (the oracle form) are preserved exactly.
-
-    ``fold_states=None`` picks the folded form iff len(value_cols) >=
-    ``_FOLD_MIN_COLS``.
+    timestamp (epoch seconds, double) under ``attach_ts_as``. A null in
+    the matched row stays null (no fill from older rows). One exchange
+    on ``key`` and one running ``last()``, at any attach width.
     """
     value_cols = value_cols or [
         c for c in right.columns if c not in (key, right_ts)
@@ -144,76 +108,17 @@ def asof_join(
     overlap = set(value_cols) & set(left.columns)
     if overlap:
         raise ValueError(f"value columns collide with left columns: {overlap}")
-    if fold_states is None:
-        fold_states = len(value_cols) >= _FOLD_MIN_COLS
 
     lk, rk = (0, 1) if strict else (1, 0)
-
-    if not fold_states:
-        l_tag = (
-            left.withColumn("_k", F.lit(lk))
-            .withColumn("_ets", epoch_seconds(left_ts))
-            .withColumn(attach_ts_as, F.lit(None).cast("double"))
-        )
-        r_tag = (
-            right.withColumnRenamed(right_ts, "_rts")
-            .withColumn("_k", F.lit(rk))
-            .withColumn("_ets", epoch_seconds(F.col("_rts")))
-            .withColumn(attach_ts_as, epoch_seconds(F.col("_rts")))
-            .drop("_rts")
-        )
-        u = l_tag.unionByName(r_tag, allowMissingColumns=True)
-
-        # tie-break equal-ts right rows deterministically by their values
-        # (matches the struct-max convention of the salted path)
-        w = (
-            Window.partitionBy(key)
-            .orderBy("_ets", "_k", F.struct(*[F.col(c) for c in value_cols]))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        filled = u.select(
-            "*",
-            *[
-                F.last(c, ignorenulls=True).over(w).alias(f"_f_{c}")
-                for c in value_cols
-            ],
-            F.last(attach_ts_as, ignorenulls=True).over(w).alias("_f_ts"),
-        )
-        return filled.filter(F.col("_k") == lk).select(
-            *[c for c in left.columns],
-            *[F.col(f"_f_{c}").alias(c) for c in value_cols],
-            F.col("_f_ts").alias(attach_ts_as),
-        )
-
-    l_tag = (
-        left.withColumn("_k", F.lit(lk))
-        .withColumn("_ets", epoch_seconds(left_ts))
-    )
-    r_tag = right.select(
+    l_tag = left.withColumn("_k", F.lit(lk)).withColumn("_ets", epoch_seconds(left_ts))
+    rts = epoch_seconds(F.col(right_ts))
+    r_rows = right.select(
         key,
-        epoch_seconds(F.col(right_ts)).alias("_ets"),
+        rts.alias("_ets"),
         F.lit(rk).alias("_k"),
-        epoch_seconds(F.col(right_ts)).alias("_ats"),
-        *[F.col(c) for c in value_cols],
+        _row_struct(rts, value_cols).alias("_row"),
     )
-    r_states = _right_fill_states(r_tag, key, value_cols)
-    u = l_tag.unionByName(r_states, allowMissingColumns=True)
-
-    w = (
-        Window.partitionBy(key)
-        .orderBy("_ets", "_k")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = u.select(
-        "*", F.last("_state", ignorenulls=True).over(w).alias("_f")
-    )
-    left_only = filled.filter(F.col("_k") == lk)
-    out = left_only.select(
-        *[c for c in left.columns],
-        *[F.col(f"_f.{c}").alias(c) for c in value_cols],
-        F.col("_f._ts").alias(attach_ts_as),
-    )
-    return out
+    return _attach_latest(l_tag, r_rows, [key], left.columns, value_cols, lk, attach_ts_as)
 
 
 def asof_join_salted(
@@ -227,25 +132,19 @@ def asof_join_salted(
     attach_ts_as: str = "asof_ts",
     block_seconds: float = 3600.0,
     hot_threshold: int = 100_000,
-    fold_states: bool | None = None,
 ) -> DataFrame:
     """Skew-resistant as-of join: hot conversations are windowed per
-    (conv_id, time-block) with precomputed carry-in state; the cold long
-    tail takes the direct single-window path.
+    (conv_id, time-block) with a precomputed carry-in row; the cold long
+    tail takes the direct single-window path. Same output as
+    ``asof_join``.
 
     The carry-in pass works on *block-level* rows (<= rows/block_seconds
     per conv), so its window partition is tiny even for a 10^8-turn
     conversation; the per-block windows are bounded by block occupancy.
-
-    ``fold_states``: physical-form selector, see ``asof_join`` — the
-    same per-column vs folded-state choice applied to both the cold
-    path and the per-(conv, block) hot windows.
     """
     value_cols = value_cols or [
         c for c in right.columns if c not in (key, right_ts)
     ]
-    if fold_states is None:
-        fold_states = len(value_cols) >= _FOLD_MIN_COLS
 
     counts = left.groupBy(key).agg(F.count("*").alias("_n"))
     hot_keys = counts.filter(F.col("_n") > hot_threshold).select(key)
@@ -255,8 +154,7 @@ def asof_join_salted(
     # 2x overhead on 13M rows with zero hot keys).
     if hot_keys.limit(1).count() == 0:
         return asof_join(
-            left, right, key, left_ts, right_ts, value_cols, strict,
-            attach_ts_as, fold_states=fold_states,
+            left, right, key, left_ts, right_ts, value_cols, strict, attach_ts_as
         )
     # hot set is by construction small (few convs can exceed the threshold);
     # broadcast it so the hot/cold split is a map-side semi/anti join.
@@ -265,8 +163,7 @@ def asof_join_salted(
     cold_left = left.join(hot_b, key, "left_anti")
     cold_right = right.join(hot_b, key, "left_anti")
     cold_out = asof_join(
-        cold_left, cold_right, key, left_ts, right_ts, value_cols, strict,
-        attach_ts_as, fold_states=fold_states,
+        cold_left, cold_right, key, left_ts, right_ts, value_cols, strict, attach_ts_as
     )
 
     hot_left = left.join(hot_b, key, "left_semi")
@@ -274,14 +171,16 @@ def asof_join_salted(
 
     blk = lambda ts: F.floor(epoch_seconds(ts) / F.lit(block_seconds))  # noqa: E731
 
-    # 1. per-(conv, block) final snapshot state from right rows
-    r = hot_right.withColumn("_blk", blk(right_ts)).withColumn(
-        "_rts", epoch_seconds(right_ts)
+    # 1. per-(conv, block) latest right row: the struct max is the last
+    #    row in the union window's (_ets, _k, _row) order
+    rts = epoch_seconds(F.col(right_ts))
+    r = hot_right.select(
+        key,
+        blk(right_ts).alias("_blk"),
+        rts.alias("_ets"),
+        _row_struct(rts, value_cols).alias("_row"),
     )
-    ordkey = F.struct(
-        F.col("_rts").alias("t"), *[F.col(c).alias(c) for c in value_cols]
-    )
-    per_block = r.groupBy(key, "_blk").agg(F.max(ordkey).alias("_fin"))
+    per_block = r.groupBy(key, "_blk").agg(F.max("_row").alias("_fin"))
 
     # 2. carry-in per block (tiny window: one row per occupied block per
     #    hot conv). Carry state must reach every left block — including
@@ -312,96 +211,27 @@ def asof_join_salted(
             key, "_blk", "_k", F.last("_state", ignorenulls=True).over(wub).alias("_carry")
         )
         .filter((F.col("_k") == 0) & F.col("_carry").isNotNull())
-        .select(key, "_blk", "_carry")
     )
 
-    # 3. per-(conv, block) as-of. Folded form (r8): fold [carry-in
-    #    pseudo snapshot, in-block snapshots] into per-row fill states
-    #    (tiny frames), then union with left rows and run ONE running
-    #    last(_state) per (conv, block) — same shape as the direct
-    #    path's folded form: the big exchange carries one nullable
-    #    struct slot instead of |value_cols| null slots per left row,
-    #    and the big sort key is (_ets, _k) without the value-struct
-    #    comparator. Per-column form: the classic union window with one
-    #    running last per value column.
+    # 3. per-(conv, block) as-of: the direct path's union window, with the
+    #    carry-in as a _k = -1 row that sorts before everything in its block
     lk, rk = (0, 1) if strict else (1, 0)
     l_tag = (
         hot_left.withColumn("_blk", blk(left_ts))
         .withColumn("_k", F.lit(lk))
         .withColumn("_ets", epoch_seconds(left_ts))
     )
-    if not fold_states:
-        l_tag = l_tag.withColumn(attach_ts_as, F.lit(None).cast("double"))
-        r_tag = (
-            r.withColumn("_k", F.lit(rk))
-            .withColumn("_ets", F.col("_rts"))
-            .withColumn(attach_ts_as, F.col("_rts"))
-            .drop("_rts")
-            .drop(right_ts)
-        )
-        c_tag = carry_in.select(
+    r_rows = r.withColumn("_k", F.lit(rk)).unionByName(
+        carry_in.select(
             key,
             "_blk",
-            F.lit(-1).alias("_k"),  # carry-in sorts before everything
             (F.col("_blk") * F.lit(block_seconds)).alias("_ets"),
-            F.col("_carry.t").alias(attach_ts_as),
-            *[F.col(f"_carry.{c}").alias(c) for c in value_cols],
+            F.col("_carry").alias("_row"),
+            F.lit(-1).alias("_k"),
         )
-        u = l_tag.unionByName(r_tag, allowMissingColumns=True).unionByName(
-            c_tag, allowMissingColumns=True
-        )
-        w = (
-            Window.partitionBy(key, "_blk")
-            .orderBy("_ets", "_k", F.struct(*[F.col(c) for c in value_cols]))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        filled = u.select(
-            "*",
-            *[
-                F.last(c, ignorenulls=True).over(w).alias(f"_f_{c}")
-                for c in value_cols
-            ],
-            F.last(attach_ts_as, ignorenulls=True).over(w).alias("_f_ts"),
-        )
-        hot_out = filled.filter(F.col("_k") == lk).select(
-            *[c for c in left.columns],
-            *[F.col(f"_f_{c}").alias(c) for c in value_cols],
-            F.col("_f_ts").alias(attach_ts_as),
-        )
-        return cold_out.unionByName(hot_out)
-
-    r_tag = r.select(
-        key,
-        "_blk",
-        F.col("_rts").alias("_ets"),
-        F.lit(rk).alias("_k"),
-        F.col("_rts").alias("_ats"),
-        *[F.col(c) for c in value_cols],
     )
-    c_tag = carry_in.select(
-        key,
-        "_blk",
-        (F.col("_blk") * F.lit(block_seconds)).alias("_ets"),
-        F.lit(-1).alias("_k"),  # carry-in sorts before everything in the block
-        F.col("_carry.t").alias("_ats"),
-        *[F.col(f"_carry.{c}").alias(c) for c in value_cols],
-    )
-    states = _right_fill_states(
-        c_tag.unionByName(r_tag), key, value_cols, extra_part_cols=["_blk"]
-    )
-    u = l_tag.unionByName(states, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(key, "_blk")
-        .orderBy("_ets", "_k")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = u.select(
-        "*", F.last("_state", ignorenulls=True).over(w).alias("_f")
-    )
-    hot_out = filled.filter(F.col("_k") == lk).select(
-        *[c for c in left.columns],
-        *[F.col(f"_f.{c}").alias(c) for c in value_cols],
-        F.col("_f._ts").alias(attach_ts_as),
+    hot_out = _attach_latest(
+        l_tag, r_rows, [key, "_blk"], left.columns, value_cols, lk, attach_ts_as
     )
     return cold_out.unionByName(hot_out)
 

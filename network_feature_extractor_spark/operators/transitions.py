@@ -149,9 +149,9 @@ def sequence_features(
       self-pairs are the reference's "abnormal sequence" detectors
       (SYN->SYN etc., ``flag_analysis.py:544-583``).
     - W6 ``has_handshake`` / ``handshake_count``: rows completing the
-      ``trigram`` prev2->prev->current (3-way handshake analog). Null
-      when no row can decide it (a one-turn session ending on the
-      trigram's last value).
+      ``trigram`` prev2->prev->current (3-way handshake analog). The
+      match is null-safe, so every key decides it: a one-turn session
+      reads 0.
     - W7 ``has_teardown`` / ``has_abnormal`` / ``abnormal_count``: the
       ``composite_sequence_flags`` semantics.
     - A7 ``cnt_contains_*`` / ``cnt_exact_*_tool``: the
@@ -167,7 +167,7 @@ def sequence_features(
     d = with_session_lags(df, key_cols, role_col=role_col)
     prev, prev2, cur = F.col("_prev_role"), F.col("_prev2_role"), F.col(role_col)
     ga, gb, gc = trigram
-    pattern_hit = ((prev2 == ga) & (prev == gb) & (cur == gc)).cast("int")
+    pattern_hit = (prev2.eqNullSafe(ga) & prev.eqNullSafe(gb) & cur.eqNullSafe(gc)).cast("int")
     per_pair = d.groupBy(*key_cols, prev.alias("_a"), cur.alias("_b")).agg(
         F.count("*").alias("_c"),
         F.max(pattern_hit).alias("_hs_max"),

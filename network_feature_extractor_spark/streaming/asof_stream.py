@@ -12,12 +12,14 @@ Input: ONE tagged stream per the batch union trick —
     conv_id, kind (0 = turn, 1 = snapshot), ts,
     turn_idx (turn rows), snap_value (snapshot rows)
 
-Per micro-batch and key the rows are ordered by (ts, kind, snap_value)
-— turns sort before snapshots at equal ts, so the strict no-leak
-tie-break is positional, exactly like the batch plan — then the
-snapshot column is forward-filled (vectorized, no per-row Python) with
-the carried state as the seed. Snapshot state then advances to the
-batch's latest snapshot.
+Per micro-batch and key the rows are ordered by (ts, kind, snap_value),
+nulls first — turns sort before snapshots at equal ts, so the strict
+no-leak tie-break is positional, exactly like the batch plan — then the
+POSITION of the latest snapshot row is forward-filled (vectorized, no
+per-row Python) with the carried snapshot as the seed, and each turn
+takes that row's timestamp and value together: a null-valued snapshot
+attaches null, as in the batch plan's whole-row attach. Snapshot state
+then advances to the batch's latest snapshot.
 
 Ordering caveat for the UNBUFFERED attach (inherent to streaming as-of):
 rows are ordered within a micro-batch and state carries across batches
@@ -41,6 +43,7 @@ from __future__ import annotations
 
 from typing import Iterable, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -95,7 +98,7 @@ def _attach(
     # sort/seed/ffill/carry shared with the buffered variant so the strict
     # tie-break can never desynchronize between the two paths
     out, new_ts, new_val = _asof_emit(conv_id, pdf, last_ts, last_val)
-    if new_val is not None and (last_val is None or (new_ts, new_val) != (last_ts, last_val)):
+    if new_ts is not None and (new_ts, new_val) != (last_ts, last_val):
         state.update((new_ts, new_val))
     yield out
 
@@ -134,27 +137,34 @@ def _asof_emit(
     last_val: float | None,
 ) -> tuple[pd.DataFrame, float | None, float | None]:
     """Sort + seed + ffill over the ready rows; return (emitted turns,
-    new snapshot carry). Same strict tie-break as the unbuffered path."""
-    ready = ready.sort_values(["_ets", "kind", "snap_value"], kind="mergesort")
-    filled_val = ready["snap_value"].ffill()
-    filled_ts = ready["_ets"].where(ready["kind"] == 1).ffill()
-    if last_val is not None:
-        filled_val = filled_val.fillna(last_val)
-        filled_ts = filled_ts.fillna(last_ts)
-    is_turn = (ready["kind"] == 0).to_numpy()
+    new snapshot carry). Same strict tie-break as the unbuffered path.
+
+    The carry is the latest snapshot row before ``ready``: ``last_ts`` set
+    means it exists, whatever ``last_val`` holds (null included)."""
+    ready = ready.sort_values(
+        ["_ets", "kind", "snap_value"], kind="mergesort", na_position="first"
+    )
+    is_snap = (ready["kind"] == 1).to_numpy()
+    # index of the latest snapshot row at or before each row; -1 picks
+    # the carry appended after the batch's rows
+    pos = np.maximum.accumulate(np.where(is_snap, np.arange(len(ready)), -1))
+    ets = np.append(ready["_ets"].to_numpy(dtype=float), np.nan if last_ts is None else last_ts)
+    val = np.append(
+        ready["snap_value"].to_numpy(dtype=float), np.nan if last_val is None else last_val
+    )
+    is_turn = ~is_snap
     out = pd.DataFrame(
         {
             "conv_id": conv_id,
             "turn_idx": ready["turn_idx"].to_numpy()[is_turn],
-            "snap_value": filled_val.to_numpy()[is_turn],
-            "asof_ts": filled_ts.to_numpy()[is_turn],
+            "snap_value": val[pos][is_turn],
+            "asof_ts": ets[pos][is_turn],
             "turn_ets": ready["_ets"].to_numpy()[is_turn],
         }
     )
-    snaps = ready[ready["kind"] == 1]
-    if len(snaps):
-        last_ts = float(snaps["_ets"].iloc[-1])
-        last_val = float(snaps["snap_value"].iloc[-1])
+    if is_snap.any():
+        last_ts = float(ets[pos[-1]])
+        last_val = None if np.isnan(val[pos[-1]]) else float(val[pos[-1]])
     return out, last_ts, last_val
 
 

@@ -189,9 +189,10 @@ def asof_oracle(
                     for c in value_cols:
                         rec[c] = None
                 else:
-                    # tie-break equal-ts snapshots by value struct (engine convention)
+                    # tie-break equal-ts snapshots by value struct (engine
+                    # convention; Spark's struct order puts nulls first)
                     vis = vis.sort_values(
-                        ["snap_ts"] + value_cols, kind="mergesort"
+                        ["snap_ts"] + value_cols, kind="mergesort", na_position="first"
                     )
                     last = vis.iloc[-1]
                     for c in value_cols:

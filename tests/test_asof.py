@@ -36,37 +36,6 @@ def test_asof_inclusive_matches_bruteforce_oracle(spark, turns, snapshots, turns
     _cmp(got, exp, ["f_a", "f_b"])
 
 
-def test_folded_equals_percol(spark, turns, snapshots):
-    """The r8 folded-state physical form must return the same rows as
-    the classic per-column union window — both strict modes, and on the
-    salted path; null-bearing value columns exercise the per-column
-    fill semantics (a null field in a later snapshot must NOT erase an
-    earlier non-null fill)."""
-    snaps_nulls = snapshots.withColumn(
-        "f_a", F.when(F.col("f_b") % 3 < 1, F.col("f_a"))
-    )
-    for strict in (True, False):
-        percol = asof_join(
-            turns, snaps_nulls, value_cols=["f_a", "f_b"], strict=strict,
-            fold_states=False,
-        ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-        folded = asof_join(
-            turns, snaps_nulls, value_cols=["f_a", "f_b"], strict=strict,
-            fold_states=True,
-        ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-        _cmp(folded, percol, ["f_a", "f_b", "asof_ts"])
-
-    salted_percol = asof_join_salted(
-        turns, snapshots, value_cols=["f_a", "f_b"], hot_threshold=10,
-        block_seconds=60.0, fold_states=False,
-    ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-    salted_folded = asof_join_salted(
-        turns, snapshots, value_cols=["f_a", "f_b"], hot_threshold=10,
-        block_seconds=60.0, fold_states=True,
-    ).select("conv_id", "turn_idx", "f_a", "f_b", "asof_ts").toPandas()
-    _cmp(salted_folded, salted_percol, ["f_a", "f_b", "asof_ts"])
-
-
 def test_salted_equals_direct(spark, turns, snapshots):
     direct = asof_join(turns, snapshots, value_cols=["f_a", "f_b"]).select(
         "conv_id", "turn_idx", "f_a", "f_b", "asof_ts"

@@ -1,13 +1,15 @@
 """Property-based as-of join testing: random tiny scenarios (including
-equal timestamps, empty sides, single rows) vs the brute-force pandas
-oracle, in both strictness modes, direct and salted paths."""
+equal timestamps, empty sides, single rows, null snapshot values) vs the
+brute-force pandas oracle, in both strictness modes, direct and salted
+paths."""
 
 from datetime import datetime, timedelta
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 from network_feature_extractor_spark.datagen import SNAPSHOTS_SCHEMA, TURNS_SCHEMA
 from network_feature_extractor_spark.operators.asof import asof_join, asof_join_salted
@@ -15,6 +17,20 @@ from network_feature_extractor_spark.operators.asof import asof_join, asof_join_
 from oracle_pandas import asof_oracle
 
 BASE = datetime(2024, 1, 1)
+
+# f_a may be null: the attach must keep the latest row's null, not fill it
+SNAPS_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in SNAPSHOTS_SCHEMA.fields]
+)
+
+
+def _turn(cid, i, o):
+    return (cid, i, "user", "x", None, BASE + timedelta(seconds=o))
+
+
+def _snap(cid, o, f_a, f_b):
+    return (cid, BASE + timedelta(seconds=o), f_a, f_b)
+
 
 # coarse second offsets -> frequent exact ties between turns and snapshots
 offsets = st.integers(min_value=0, max_value=30)
@@ -28,11 +44,23 @@ def scenario(draw):
         cid = f"c{ci}"
         t_offs = sorted(draw(st.lists(offsets, min_size=1, max_size=6)))
         for i, o in enumerate(t_offs):
-            turns.append((cid, i, "user", "x", None, BASE + timedelta(seconds=o)))
+            turns.append(_turn(cid, i, o))
         s_offs = draw(st.lists(offsets, min_size=0, max_size=5))
         for j, o in enumerate(sorted(s_offs)):
-            snaps.append((cid, BASE + timedelta(seconds=o), float(o), float(j)))
+            f_a = None if draw(st.booleans()) else float(o)
+            snaps.append(_snap(cid, o, f_a, float(j)))
     return turns, snaps
+
+
+# a null-valued latest snapshot after a non-null one: c0's turns at 5
+# and 10 read it through the salted path's block carry-in (blocks of 7 s
+# start at offsets -3, 4, 11), c1's turns at 8 and 9 within one block
+NULL_AFTER_VALUE = (
+    [_turn("c0", i, o) for i, o in enumerate((0, 5, 10))]
+    + [_turn("c1", i, o) for i, o in enumerate((5, 8, 9))],
+    [_snap("c0", 1, 1.0, 0.0), _snap("c0", 3, None, 1.0),
+     _snap("c1", 4, 2.0, 0.0), _snap("c1", 6, None, 1.0)],
+)
 
 
 @settings(
@@ -41,13 +69,12 @@ def scenario(draw):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
 @given(scenario(), st.booleans())
+@example(NULL_AFTER_VALUE, True)
+@example(NULL_AFTER_VALUE, False)
 def test_asof_matches_bruteforce(spark, scen, strict):
     turns_rows, snap_rows = scen
     turns = spark.createDataFrame(turns_rows, schema=TURNS_SCHEMA)
-    if snap_rows:
-        snaps = spark.createDataFrame(snap_rows, schema=SNAPSHOTS_SCHEMA)
-    else:
-        snaps = spark.createDataFrame([], schema=SNAPSHOTS_SCHEMA)
+    snaps = spark.createDataFrame(snap_rows, schema=SNAPS_SCHEMA)
 
     got = (
         asof_join(turns, snaps, value_cols=["f_a", "f_b"], strict=strict)
@@ -99,11 +126,7 @@ def test_tolerance_gate_property(spark, scen, strict, tol):
 
     turns_rows, snap_rows = scen
     turns = spark.createDataFrame(turns_rows, schema=TURNS_SCHEMA)
-    snaps = (
-        spark.createDataFrame(snap_rows, schema=SNAPSHOTS_SCHEMA)
-        if snap_rows
-        else spark.createDataFrame([], schema=SNAPSHOTS_SCHEMA)
-    )
+    snaps = spark.createDataFrame(snap_rows, schema=SNAPS_SCHEMA)
     raw = asof_join(turns, snaps, value_cols=["f_a", "f_b"], strict=strict)
 
     def fetch(df, cols):

@@ -29,24 +29,37 @@ def test_pipeline_end_to_end(spark, turns):
 
 
 def test_pipeline_snapshot_consistency(spark, turns):
-    """The attached prev_* features must equal the snapshot row of the
-    latest session that closed strictly before the turn."""
+    """Every turn attaches, whole, the snapshot row of the latest session
+    that closed strictly before it: ``asof_ts`` is that session's
+    ``end_time`` and every ``prev_*`` column equals the row's own value,
+    nulls included (NaN == NaN)."""
+    import pandas as pd
+
     enriched, snap = run_pipeline(turns)
-    e = enriched.select(
-        "conv_id", "turn_idx", "ts", "prev_n_turns", "asof_ts"
-    ).toPandas()
-    s = snap.select("conv_id", "session_id", "end_time", "n_turns").toPandas()
-    by_conv = {k: g.sort_values("end_time") for k, g in s.groupby("conv_id")}
-    rng = np.random.default_rng(0)
-    sample = e.sample(min(len(e), 200), random_state=0)
-    for _, row in sample.iterrows():
-        g = by_conv.get(row["conv_id"])
-        ts = row["ts"].to_datetime64().astype("datetime64[us]").astype("int64") / 1e6
-        vis = g[g["end_time"] < ts]
-        if len(vis) == 0:
-            assert row["prev_n_turns"] is None or np.isnan(row["prev_n_turns"])
-        else:
-            assert row["prev_n_turns"] == vis.iloc[-1]["n_turns"], row["conv_id"]
+    s = snap.drop("snap_ts").toPandas()
+    prev = [f"prev_{c}" for c in s.columns if c not in ("conv_id", "session_id")]
+    e = enriched.select("conv_id", "turn_idx", "ts", "asof_ts", *prev).toPandas()
+
+    e["_ets"] = e["ts"].astype("datetime64[us]").astype("int64") / 1e6
+    latest = pd.merge_asof(
+        e.sort_values("_ets"),
+        s[["conv_id", "end_time"]].sort_values("end_time"),
+        left_on="_ets", right_on="end_time", by="conv_id",
+        allow_exact_matches=False,
+    )
+    assert latest["asof_ts"].equals(latest["end_time"].rename("asof_ts"))
+
+    m = e.merge(
+        s.rename(columns={c[len("prev_"):]: c for c in prev}).assign(
+            asof_ts=s["end_time"]
+        ),
+        on=["conv_id", "asof_ts"], how="left", suffixes=("", "_snap"),
+    )
+    assert len(m) == len(e)  # one snapshot row per (conv_id, end_time)
+    for c in prev:
+        got, exp = m[c], m[f"{c}_snap"]
+        same = (got.isna() & exp.isna()) | (got == exp)
+        assert same.all(), (c, m.loc[~same, ["conv_id", "turn_idx", c, f"{c}_snap"]])
 
 
 def test_checkpoint_resume(spark, turns, tmp_path):

@@ -335,12 +335,10 @@ def test_tfidf_docfreq_join_two_forms(spark):
 
 
 def test_tolerance_gate_adds_no_exchange(spark, turns, snapshots):
-    """The TTL gate must stay a map-side projection: the gated as-of
-    plan carries exactly the join's own exchange count. Narrow attaches
-    (< _FOLD_MIN_COLS) keep the classic single-exchange per-column
-    union window; the folded r8 form adds exactly one SMALL right-side
-    exchange and its big window runs ONE last(_state) instead of one
-    running last per value column."""
+    """The as-of attach is one union window at any width: one exchange
+    and one running last() over the packed right row, for a narrow and a
+    6-column attach alike. The TTL gate stays a map-side projection: the
+    gated plan carries exactly the join's own exchange count."""
     from network_feature_extractor_spark.operators.asof import asof_join, tolerance_gate
 
     raw = asof_join(turns, snapshots, value_cols=["f_a", "f_b"])
@@ -349,14 +347,14 @@ def test_tolerance_gate_adds_no_exchange(spark, turns, snapshots):
     assert raw_plan.count("Exchange") == 1, raw_plan.count("Exchange")
     assert gated_plan.count("Exchange") == raw_plan.count("Exchange")
 
-    folded = asof_join(
-        turns, snapshots, value_cols=["f_a", "f_b"], fold_states=True
+    wide_cols = ["f_a", "f_b", "f_c", "f_d", "f_e", "f_f"]
+    wide_snaps = snapshots.select(
+        "conv_id", "snap_ts", "f_a", "f_b",
+        *[(F.col("f_a") + i).alias(c) for i, c in enumerate(wide_cols[2:])],
     )
-    fplan = _plan(folded)
-    assert fplan.count("Exchange") == 2, fplan.count("Exchange")
-    # the union-side window carries a single running last over the state
-    # struct — per-column lasts live in the small right-side fold only
-    assert fplan.count("last(_state") == 1, fplan
+    wide = _plan(asof_join(turns, wide_snaps, value_cols=wide_cols))
+    assert wide.count("Exchange") == 1, wide
+    assert wide.count("last(") == 1, wide
 
 
 def test_future_labels_single_exchange(spark, turns):

@@ -156,10 +156,20 @@ def test_stateful_running_counts(spark, turns_dir, tmp_path):
         assert got.loc[cid, "total_text_len"] == exp.loc[cid, "total_text_len"], cid
 
 
+def _null_some(snapshots):
+    """snap_value = f_a, null on every third generated snapshot of a conv
+    (f_b = conv index + j / 100 for the j-th)."""
+    keep = F.round(F.col("f_b") * 100) % 3 != 1
+    return snapshots.select(
+        "conv_id", "snap_ts", F.when(keep, F.col("f_a")).alias("snap_value")
+    )
+
+
 def test_streaming_asof_matches_batch(spark, tmp_path):
     """Streaming point-in-time attach == batch asof_join on the same
     drained input, including cross-micro-batch snapshot carry (two
-    time-ranged files, one file per trigger)."""
+    time-ranged files, one file per trigger) and null-valued snapshots,
+    which attach null rather than an older snapshot's value."""
     import time
 
     from network_feature_extractor_spark.datagen import generate_snapshots, generate_turns
@@ -171,9 +181,7 @@ def test_streaming_asof_matches_batch(spark, tmp_path):
     )
 
     turns = generate_turns(spark, 20).select("conv_id", "turn_idx", "ts")
-    snaps = generate_snapshots(spark, 20).select(
-        "conv_id", "snap_ts", F.col("f_a").alias("snap_value")
-    )
+    snaps = _null_some(generate_snapshots(spark, 20))
     tagged = tag_for_asof(turns, snaps, "snap_value").cache()
 
     # split on the median ts -> two event-time-ordered files; distinct
@@ -223,6 +231,8 @@ def test_streaming_asof_matches_batch(spark, tmp_path):
     )
     assert len(got) == len(exp)
     assert (got["conv_id"] == exp["conv_id"]).all()
+    # non-vacuity: some turns attach a matched snapshot whose value is null
+    assert (exp["asof_ts"].notna() & exp["snap_value"].isna()).any()
     for c in ("snap_value", "asof_ts"):
         import numpy as np
 
@@ -255,7 +265,7 @@ def test_streaming_asof_buffered_exact_under_shuffled_files(spark, tmp_path):
     """Property: with delay >= the stream's total event-time disorder, the
     buffered attach equals batch asof_join EXACTLY even when rows are
     randomly shuffled across micro-batch files (snapshots landing many
-    batches after later-event-time turns)."""
+    batches after later-event-time turns), null snapshot values included."""
     import time
 
     import numpy as np
@@ -270,9 +280,7 @@ def test_streaming_asof_buffered_exact_under_shuffled_files(spark, tmp_path):
     )
 
     turns = generate_turns(spark, 15).select("conv_id", "turn_idx", "ts")
-    snaps = generate_snapshots(spark, 15).select(
-        "conv_id", "snap_ts", F.col("f_a").alias("snap_value")
-    )
+    snaps = _null_some(generate_snapshots(spark, 15))
     n_turns = turns.count()
     tagged_pd = tag_for_asof(turns, snaps, "snap_value").toPandas()
     # deterministic arbitrary shuffle -> 4 files, one per trigger
@@ -321,6 +329,8 @@ def test_streaming_asof_buffered_exact_under_shuffled_files(spark, tmp_path):
     )
     assert len(got) == len(exp)
     assert (got["conv_id"] == exp["conv_id"]).all()
+    # non-vacuity: some turns attach a matched snapshot whose value is null
+    assert (exp["asof_ts"].notna() & exp["snap_value"].isna()).any()
     for c in ("snap_value", "asof_ts"):
         assert np.allclose(
             got[c].astype(float), exp[c].astype(float), atol=1e-6, equal_nan=True
@@ -481,9 +491,7 @@ def test_streaming_tolerance_gate_matches_batch(spark, tmp_path):
 
     TOL = 60.0
     turns = generate_turns(spark, 20).select("conv_id", "turn_idx", "ts")
-    snaps = generate_snapshots(spark, 20).select(
-        "conv_id", "snap_ts", F.col("f_a").alias("snap_value")
-    )
+    snaps = _null_some(generate_snapshots(spark, 20))
     tagged = tag_for_asof(turns, snaps, "snap_value").cache()
     mid = tagged.selectExpr("percentile(cast(ts as double), 0.5) p").collect()[0]["p"]
     src = str(tmp_path / "tagged")
