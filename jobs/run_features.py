@@ -4,13 +4,28 @@
     spark-submit --py-files engine.zip jobs/run_features.py \
         --input  /data/turns_iceberg_or_parquet \
         --output /data/features \
-        --session-gap 300 --buckets 64 [--resume]
+        --session-gap 300 --buckets 64
 
 Reads the turns table, runs the full feature pipeline (per-turn windowed
 features -> session snapshots -> strict as-of attach), writes partitioned
 parquet + per-bucket manifest (resumable), and a per-partition lineage
 metrics table. On a cluster the SparkSession comes from spark-submit; in
 local dev it falls back to the engine's local builder.
+
+One run builds the pipeline once over every bucket its manifest does not
+mark done and writes them in one ``per_turn/bucket=b`` partitioned write.
+Rerunning the same command resumes: it skips done buckets. A crash loses
+that run's pending buckets, not finished ones. Each manifest entry's
+``seconds`` is the wall time of the write that built the bucket, shared
+by all buckets of that run.
+
+The job does not land the per-turn table (``run_pipeline`` without
+``materialize_dir``), so each snapshot module recomputes the per-turn
+windows. Landing it was measured not to pay on 12k turns, 2 buckets and
+4 cores, in 4 alternating pairs of warm runs with the same manifest
+checksums: 12.3-17.7 s unlanded against 13.3-15.6 s landed when each
+bucket was built alone, and medians 6.12 s unlanded against 6.09 s landed
+with one build per run. Landing adds a second write of the per-turn rows.
 
 Build engine.zip:  cd repo && zip -r engine.zip network_feature_extractor_spark
 """

@@ -2692,11 +2692,10 @@ _HD_DIM = 512
 _W_HD = similarity.hyperplane_weights(1, 8, _HD_DIM, seed="hp")[0]
 
 
-def _sql_hd_bit(row: list[float]) -> str:
-    lit = "[" + ", ".join(repr(w) for w in row) + "]"
+def _sql_hd_bit(j: int) -> str:
     return (
         f"(CASE WHEN list_reduce(list_transform(range(1, {_HD_DIM + 1}), "
-        f"i -> ve[CAST(i AS INT)] * (CAST({lit} AS DOUBLE[]))[CAST(i AS INT)]), "
+        f"i -> ve[CAST(i AS INT)] * w{j}[CAST(i AS INT)]), "
         "(a, b) -> a + b) >= 0 THEN '1' ELSE '0' END)"
     )
 
@@ -2705,11 +2704,18 @@ _HD_TILES = ", ".join(
     f"list_transform(embedding, x -> CAST(x AS DOUBLE) * {2.0 ** -j!r})"
     for j in range(8)
 )
+# the weight arrays live in a one-row CTE: an array literal inside the
+# lambda is rebuilt for every element, quadratic in dim
+_HD_WEIGHTS = ", ".join(
+    "CAST([" + ", ".join(repr(w) for w in row) + f"] AS DOUBLE[]) AS w{j}"
+    for j, row in enumerate(_W_HD)
+)
 
 _HD_ORACLE = f"""
-    WITH e AS (SELECT vec_id, flatten([{_HD_TILES}]) AS ve FROM embeddings),
-    b AS (SELECT vec_id, ({" || ".join(_sql_hd_bit(r) for r in _W_HD)}) AS bucket
-          FROM e)
+    WITH w AS (SELECT {_HD_WEIGHTS}),
+    e AS (SELECT vec_id, flatten([{_HD_TILES}]) AS ve FROM embeddings),
+    b AS (SELECT vec_id, ({" || ".join(_sql_hd_bit(j) for j in range(len(_W_HD)))}) AS bucket
+          FROM e CROSS JOIN w)
     SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(MIN(vec_id) AS BIGINT) AS min_vec_id
     FROM b GROUP BY bucket

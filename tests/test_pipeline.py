@@ -2,6 +2,7 @@ import json
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from network_feature_extractor_spark.config import EngineConfig
@@ -62,6 +63,28 @@ def test_pipeline_snapshot_consistency(spark, turns):
         assert same.all(), (c, m.loc[~same, ["conv_id", "turn_idx", c, f"{c}_snap"]])
 
 
+def _bucket_files(out):
+    """Every file of each ``bucket=b`` directory under ``out``, with its
+    modification time."""
+    return {
+        os.path.basename(d): {n: os.stat(os.path.join(d, n)).st_mtime_ns for n in names}
+        for d, _, names in os.walk(out)
+        if os.path.basename(d).startswith("bucket=")
+    }
+
+
+def _drop_entries(out, buckets):
+    mpath = os.path.join(out, "_manifest.json")
+    m = json.load(open(mpath))
+    for b in buckets:
+        del m[b]
+    json.dump(m, open(mpath, "w"))
+
+
+def _stats(manifest):
+    return {b: {k: v for k, v in e.items() if k != "seconds"} for b, e in manifest.items()}
+
+
 def test_checkpoint_resume(spark, turns, tmp_path):
     out = str(tmp_path / "features")
 
@@ -71,28 +94,74 @@ def test_checkpoint_resume(spark, turns, tmp_path):
         calls["n"] += 1
         return per_turn_features(df).drop("text", "tool")
 
+    # one run builds and writes every pending bucket at once
     m1 = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
+    assert sorted(m1) == ["0", "1", "2", "3"]
     assert all(v["status"] == "done" for v in m1.values())
-    first_calls = calls["n"]
-    assert first_calls == 4
+    assert calls["n"] == 1
 
     # resume: manifest says done -> zero re-processing
+    files = _bucket_files(out)
     m2 = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
-    assert calls["n"] == first_calls
+    assert calls["n"] == 1
     assert m2 == m1
+    assert _bucket_files(out) == files
 
-    # partial resume: delete one bucket's manifest entry -> only it reruns
-    mpath = os.path.join(out, "_manifest.json")
-    m = json.load(open(mpath))
-    del m["2"]
-    json.dump(m, open(mpath, "w"))
+    # partial resume: delete one bucket's manifest entry -> only it reruns,
+    # and no other bucket's files are rewritten
+    _drop_entries(out, ["2"])
     m3 = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
-    assert calls["n"] == first_calls + 1
-    assert m3["2"]["rows"] == m1["2"]["rows"]
-    assert m3["2"]["checksum"] == m1["2"]["checksum"]
+    assert calls["n"] == 2
+    assert _stats(m3) == _stats(m1)
+    after = _bucket_files(out)
+    assert {b: f for b, f in after.items() if b != "bucket=2"} == {
+        b: f for b, f in files.items() if b != "bucket=2"
+    }
+    assert after["bucket=2"] != files["bucket=2"]  # rebuilt
 
     total = sum(v["rows"] for v in m3.values())
     assert total == turns.count()
+    assert spark.read.parquet(out).count() == total
+
+
+@pytest.mark.parametrize("n_buckets, empty_input, n_empty", [(4, True, 4), (64, False, 44)])
+def test_checkpoint_buckets_without_rows(spark, tmp_path, n_buckets, empty_input, n_empty):
+    """A bucket that gets no rows is done with 0 rows and a null checksum:
+    every bucket of an empty input, and 44 of 64 buckets over 20
+    conversations. Every entry equals a direct per-bucket aggregate of
+    the input."""
+    from network_feature_extractor_spark.datagen import generate_turns
+
+    turns = generate_turns(spark, 20)
+    if empty_input:
+        turns = turns.limit(0)
+    build = lambda df: per_turn_features(df).drop("text", "tool")  # noqa: E731
+    m = checkpoint.run_resumable(
+        turns, str(tmp_path / "out"), build, n_buckets=n_buckets, checksum_col="conv_id"
+    )
+    assert sorted(m, key=int) == [str(b) for b in range(n_buckets)]
+    assert sum(v["rows"] == 0 for v in m.values()) == n_empty
+    assert sum(v["rows"] for v in m.values()) == turns.count()
+
+    direct = (
+        turns.groupBy(checkpoint.bucket_col("conv_id", n_buckets).alias("b"))
+        .agg(
+            F.count("*").alias("rows"),
+            F.countDistinct("conv_id").alias("n_keys"),
+            F.sum(F.crc32(F.col("conv_id").cast("string"))).alias("checksum"),
+        )
+        .collect()
+    )
+    exp = {str(b): {"status": "done", "rows": 0, "n_keys": 0, "checksum": None}
+           for b in range(n_buckets)}
+    exp.update(
+        {
+            str(r["b"]): {"status": "done", "rows": r["rows"], "n_keys": r["n_keys"],
+                          "checksum": r["checksum"]}
+            for r in direct
+        }
+    )
+    assert _stats(m) == exp
 
 
 def test_partition_metrics(spark, turns):
@@ -185,31 +254,48 @@ def test_jobs_entrypoint_end_to_end(spark, tmp_path):
 
 
 def test_checkpoint_survives_crash_mid_run(spark, turns, tmp_path):
-    """Simulated failure: the build fn raises on one bucket; previously
-    completed buckets persist in the manifest and are not re-processed on
-    the retry run."""
+    """A run commits its pending buckets together. A crash, in ``build`` or
+    inside a write task, loses only that run's pending buckets: finished
+    buckets keep their manifest entries and files, ``per_turn`` holds only
+    their rows, and the retry builds once and restores the lost buckets
+    with the same rows and checksums."""
     out = str(tmp_path / "crashy")
-    calls = {"n": 0, "fail_armed": True}
+    calls = {"n": 0}
 
     def build(df):
         calls["n"] += 1
-        if calls["n"] == 3 and calls["fail_armed"]:
-            calls["fail_armed"] = False
-            raise RuntimeError("injected crash")
         return per_turn_features(df).drop("text", "tool")
 
-    import pytest as _pytest
+    def crash_in_build(df):
+        raise RuntimeError("injected crash")
 
-    with _pytest.raises(RuntimeError):
-        checkpoint.run_resumable(turns, out, build, n_buckets=4)
-    m = json.load(open(os.path.join(out, "_manifest.json")))
-    assert sum(1 for v in m.values() if v["status"] == "done") == 2
+    def crash_in_write(df):
+        boom = F.raise_error(F.lit("injected crash"))
+        return build(df).withColumn("_boom", F.when(F.col("turn_idx") >= 0, boom))
 
-    n_before = calls["n"]
-    m2 = checkpoint.run_resumable(turns, out, build, n_buckets=4)
-    # retry processes only the 2 remaining buckets
-    assert calls["n"] == n_before + 2
-    assert sum(v["rows"] for v in m2.values()) == turns.count()
+    full = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
+    lost = ["1", "2"]
+    kept = {b: v for b, v in full.items() if b not in lost}
+    kept_files = {b: f for b, f in _bucket_files(out).items() if b[len("bucket="):] in kept}
+    assert all(v["rows"] > 0 for v in full.values())
+
+    for crash in (crash_in_build, crash_in_write):
+        _drop_entries(out, lost)
+        with pytest.raises(Exception, match="injected crash"):
+            checkpoint.run_resumable(turns, out, crash, n_buckets=4, checksum_col="conv_id")
+        assert json.load(open(os.path.join(out, "_manifest.json"))) == kept
+        assert _bucket_files(out) == kept_files
+        left = spark.read.parquet(out).groupBy("bucket").count().collect()
+        assert {str(r["bucket"]): r["count"] for r in left} == {
+            b: v["rows"] for b, v in kept.items()
+        }
+
+        n_before = calls["n"]
+        m2 = checkpoint.run_resumable(turns, out, build, n_buckets=4, checksum_col="conv_id")
+        assert calls["n"] == n_before + 1
+        assert _stats(m2) == _stats(full)
+        assert {b: f for b, f in _bucket_files(out).items() if b in kept_files} == kept_files
+        assert sum(v["rows"] for v in m2.values()) == turns.count()
 
 
 def test_per_turn_text_equality_invariant(spark, turns):
